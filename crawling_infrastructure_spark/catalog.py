@@ -312,17 +312,24 @@ class BucketedTable(Table):
         return out
 
     def _stats_for(
-        self, spark: SparkSession, root_dir: str, written: dict[str, str]
+        self, df: DataFrame, root_dir: str, written: dict[str, str]
     ) -> dict[str, int] | None:
         """Per-dir counts of rows matching stat_filter among the JUST-written
-        dirs — one columnar job over data still in the page cache, pruned to
-        the filter's columns. Returns {dir_path: n} (0 for written buckets
-        with no matching rows), or None when stat tracking is off."""
+        dirs (``df`` is the frame that was written) — one columnar job over
+        data still in the page cache, pruned to the filter's columns.
+        Returns {dir_path: n} (0 for written buckets with no matching rows),
+        or None when stat tracking is off."""
         if not self.stat_filter or self.n_buckets == 1 or not written:
             return None
+        # the known schema (written columns + the _bkt partition column)
+        # skips the schema-inference job partition discovery would launch
+        schema = T.StructType(
+            [f for f in df.schema.fields if f.name != self.BKT]
+            + [T.StructField(self.BKT, T.IntegerType(), True)]
+        )
         counts = {
             int(r["b"]): int(r["n"])
-            for r in spark.read.parquet(root_dir)  # partition discovery -> _bkt
+            for r in df.sparkSession.read.schema(schema).parquet(root_dir)
             .where(self.stat_filter)
             .groupBy(F.col(self.BKT).cast("int").alias("b"))
             .agg(F.count("*").alias("n"))
@@ -384,7 +391,7 @@ class BucketedTable(Table):
     def write_full(self, df: DataFrame, tag: str | None = None) -> int:
         d = self._new_data_dir(self.current_version() + 1)
         written = self._write_partitioned(df, d)
-        stats = self._stats_for(df.sparkSession, d, written)
+        stats = self._stats_for(df, d, written)
         return self._commit_buckets({b: [p] for b, p in written.items()}, tag, stats)
 
     def merge_buckets(self, df: DataFrame, dirty: list[int], tag: str | None = None) -> int:
@@ -395,7 +402,7 @@ class BucketedTable(Table):
         d = self._new_data_dir(self.current_version() + 1)
         scoped = df.filter(self._bucket_col().isin(list(dirty)))
         written = self._write_partitioned(scoped, d, n_parts=max(1, len(dirty)))
-        stats = self._stats_for(df.sparkSession, d, written)
+        stats = self._stats_for(df, d, written)
         buckets = {
             b: dirs for b, dirs in self._current_buckets().items() if b not in dirty_set
         }
@@ -406,7 +413,7 @@ class BucketedTable(Table):
         """Append df's rows; buckets receiving rows gain one dir each."""
         d = self._new_data_dir(self.current_version() + 1)
         written = self._write_partitioned(df, d)
-        stats = self._stats_for(df.sparkSession, d, written)
+        stats = self._stats_for(df, d, written)
         buckets = {b: list(dirs) for b, dirs in self._current_buckets().items()}
         for b, p in written.items():
             buckets.setdefault(b, []).append(p)
@@ -447,7 +454,7 @@ class BucketedTable(Table):
         d = self._new_data_dir(self.current_version() + 1)
         df = spark.read.parquet(*[p for dirs in fat.values() for p in dirs])
         written = self._write_partitioned(df, d, n_parts=max(1, len(fat)))
-        stats = self._stats_for(spark, d, written)
+        stats = self._stats_for(df, d, written)
         buckets: dict[str, list[str]] = {}
         for b, dirs in cur.items():
             if b in fat:

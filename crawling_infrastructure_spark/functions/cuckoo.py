@@ -4,7 +4,7 @@ can't offer:
 
 1. **Incremental folds.** The Bloom path rebuilds a touched shard's filter
    from the FULL merged key array every epoch (operators/seen.py
-   ``update_seen`` — O(state) hashing per dirty bucket, right-sized but
+   ``filter_unseen`` — O(state) hashing per dirty bucket, right-sized but
    paid on every touch). A cuckoo shard folds a batch by inserting only
    the fresh keys into the deserialized table: O(batch) per touch, which
    at a 10^6-key bucket touched every epoch is ~10^3x less hashing.

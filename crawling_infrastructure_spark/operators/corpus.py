@@ -71,10 +71,10 @@ def build_training_corpus(
     is a min-id rule, so replays and the oracle agree row-for-row.
 
     ``eval_docs`` (optional) adds benchmark decontamination as a fifth
-    gate, applied right after the cheap lang/quality filters and BEFORE
-    any sketching: it's a broadcast window-hash probe (see
-    ``contamination``), so running it early costs one map-side pass and
-    shrinks what the expensive dedup stages see."""
+    gate, applied after the exact-dedup window (and its checkpoint) and
+    BEFORE the MinHash near-dup stage: it's a broadcast window-hash probe
+    (see ``contamination``) over the exact survivors, which share text
+    with their dropped duplicates and so their contamination status."""
     # every gate feature is a per-row expression over text, so the gated
     # set is ONE projection + filter over ONE scan — the previous
     # lang_id/quality_score joins recombined three projections of the same

@@ -564,10 +564,12 @@ def embedding_cosine_neardup(
     shuffles a few MB into #blocks partitions which AQE coalesces into ONE
     task whose join output then explodes 10^3x — measured 1.0 effective
     cores at 2*10^4 vectors. ``broadcast_pairs=True`` broadcasts one side
-    and repartitions the other to the session parallelism (right whenever
-    a block's worth of vectors fits in executor memory); False is the
-    huge-corpus path — a salted (block, salt) shuffle join that splits
-    each block's quadratic group across the cluster."""
+    and repartitions the other to the session parallelism (right only when
+    the WHOLE vector side fits in executor memory: the broadcast ships
+    every block, and the explicit hint bypasses
+    autoBroadcastJoinThreshold); False is the huge-corpus path — a salted
+    (block, salt) shuffle join that splits each block's quadratic group
+    across the cluster."""
     from crawling_infrastructure_spark.operators.similarity import (
         _fixed_dim,
         _norm_expr,

@@ -27,8 +27,10 @@ _UNROLL_MAX_DIM = 256
 
 
 def _fixed_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Uniform length of ``vec_col`` arrays, or None when ragged/empty. One
-    tiny min/max aggregate job — the price of replacing the interpreted
+    """Uniform length of ``vec_col`` arrays, or None when ragged, empty,
+    all-null (size -1) or wider than _UNROLL_MAX_DIM — every None falls
+    back to the fold, which handles those inputs. One tiny min/max
+    aggregate job — the price of replacing the interpreted
     higher-order fold with unrolled whole-stage-codegen arithmetic in every
     pair expression (guide §1.2 'per-task work'). The unrolled chain is
     bit-identical to the fold: same left-associated order, same float
@@ -39,7 +41,7 @@ def _fixed_dim(df: DataFrame, vec_col: str) -> int | None:
     ).first()
     if row is None or row.lo is None or row.lo != row.hi:
         return None
-    return int(row.lo) if row.lo <= _UNROLL_MAX_DIM else None
+    return int(row.lo) if 0 < row.lo <= _UNROLL_MAX_DIM else None
 
 
 # Terms per Project operator in with_staged_dot. A single 64-term chain
@@ -397,8 +399,9 @@ def semdedup(
     no embedding column, so nothing downstream carries vectors.
 
     ``broadcast_pairs`` picks the pair-join strategy: True broadcasts the
-    neighbor side (right whenever one partition's worth of cells fits in
-    executor memory — the sandbox, or per-cell slices at scale); False is
+    neighbor side (right only when the WHOLE vector side fits in executor
+    memory: the broadcast ships every cell, and the explicit hint bypasses
+    autoBroadcastJoinThreshold); False is
     the 10^9-vector path — a salted shuffle equi-join on (cell, salt)
     that splits each cell's quadratic pair group across ``_parallelism``
     tasks, because a plain cell-keyed shuffle both bottlenecks on

@@ -19,8 +19,12 @@ One epoch =
               deliberately trades this for a plain whole-table write — at
               that scale one write task beats bucket machinery (measured,
               round 3).
-  5. grow     outlinks -> canonicalize -> robots -> bloom+anti-join dedup
-              (S5+J3) -> new initial rows, written with the same merge
+  5. grow     outlinks -> canonicalize -> robots -> one-pass seen
+              admission (S5+J3, operators/seen.filter_unseen: tier-1
+              filter probe, exact check of the positives and the shard
+              fold in one cogroup per seen bucket, cached once) -> new
+              initial rows, written with the same merge; the folded seen
+              shards commit right after the frontier
   6. metrics  per-host lineage rows (worker_meta analogue)
   7. tag      snapshot 'epoch-K' on every table — the checkpoint
 
@@ -75,9 +79,11 @@ from crawling_infrastructure_spark.operators.proxy import proxy_feedback
 from crawling_infrastructure_spark.plans.adaptive import adaptive_epoch_budget
 from crawling_infrastructure_spark.operators.robots import RobotsCache, filter_allowed
 from crawling_infrastructure_spark.operators.seen import (
+    SHARD,
+    admitted_rows,
     build_seen,
     filter_unseen,
-    update_seen,
+    seen_shards,
 )
 from crawling_infrastructure_spark.schema import FRONTIER_SCHEMA, SEEN_SCHEMA, Status
 
@@ -354,18 +360,12 @@ class CrawlJob:
         return n
 
     # -- seen-set maintenance ----------------------------------------------
-    def _fold_into_seen(self, new_hashes: DataFrame, tag: str) -> None:
-        """Fold url_hashes into the sharded blooms, rewriting only the blobs
-        whose bucket receives hashes."""
-        dirty = self.seen_t.bucket_ids_of(new_hashes, key="url_hash")
-        if not dirty:
-            return
-        seen_dirty = self.seen_t.read_buckets(self.spark, dirty, SEEN_SCHEMA)
-        self.seen_t.merge_buckets(
-            update_seen(seen_dirty, new_hashes, self.cfg.seen_buckets,
-                        self.cfg.bloom_fpp, kind=self.cfg.seen_prefilter),
-            dirty,
-            tag=tag,
+    def _admit_unseen(self, candidates: DataFrame) -> DataFrame:
+        """``filter_unseen`` over the current seen table with this job's
+        seen-set config: the tagged frame of admitted rows + folded shards."""
+        return filter_unseen(
+            candidates, self.seen_t.read(self.spark, SEEN_SCHEMA),
+            self.cfg.seen_buckets, self.cfg.bloom_fpp, kind=self.cfg.seen_prefilter,
         )
 
     def _adaptive_budget(self) -> int:
@@ -747,8 +747,9 @@ class CrawlJob:
             _pages_job()
 
         # 5. frontier growth: outlinks -> dedup -> new initial rows. The
-        # anti-join target is the pre-merge frontier snapshot — the merge
-        # only changes statuses, never the url_hash set.
+        # dedup target (seen set, or the exact-only path's pre-merge
+        # frontier snapshot) is pre-merge state — the merge only changes
+        # statuses, never the url_hash set.
         # Everything between the pages-thread start and its join runs under
         # try/finally: if the growth agg or merge raises, the orphaned
         # daemon thread could otherwise still commit the pages append in the
@@ -756,6 +757,7 @@ class CrawlJob:
         # double-append this epoch's rows.
         outlinks = light.select(F.explode("outlinks").alias("item"))
         scratch: list = []
+        tagged: DataFrame | None = None
         try:
             candidates = frontier_rows(outlinks, self.cfg.priority, epoch=epoch)
             if self.hostrank_t is not None:
@@ -778,42 +780,53 @@ class CrawlJob:
                         ),
                         tag=f"epoch-{epoch}-bootstrap",
                     )
-                seen = self.seen_t.read(self.spark, SEEN_SCHEMA)
-                new_rows = filter_unseen(
-                    candidates, seen, self.cfg.seen_buckets, scratch=scratch
-                ).cache()
+                # ONE cached tagged frame: admitted rows for the frontier
+                # merge, folded shards for the seen commit — each dirty
+                # shard is read and cogrouped once per epoch
+                tagged = grow_src = self._admit_unseen(candidates).cache()
             elif self.cfg.dedup:
                 # exact-only path: the frontier IS the seen set; at sandbox
                 # scale the plain anti-join beats bloom cogroup round-trips
-                new_rows = candidates.join(
+                grow_src = candidates.join(
                     frontier.select("url_hash"), "url_hash", "left_anti"
                 ).cache()
             else:
-                new_rows = candidates.cache()  # reference semantics: dups permitted
+                grow_src = candidates.cache()  # reference semantics: dups permitted
+            # (unpersist must target the plan the cache was registered
+            # under, not the CollectMetrics wrapper added below)
+            scratch.append(grow_src)
+            is_row = ~F.col(SHARD) if tagged is not None else F.lit(True)
+            # growth count, the new rows' frontier buckets (bucketed layout)
+            # and the seen buckets that emitted a folded shard (collect_sets
+            # over <= n_buckets ints — VERDICT r2 item 1b)
+            growth = [F.count(F.when(is_row, 1)).alias("n")]
+            if nb > 1:
+                growth.append(F.collect_set(
+                    F.when(is_row, F.pmod(F.col("host_hash"), F.lit(nb)).cast("int"))
+                ).alias("bkts"))
+            if tagged is not None:
+                growth.append(
+                    F.collect_set(F.when(F.col(SHARD), F.col("bucket_id"))).alias("seen_bkts")
+                )
             grow_obs = None
             if nb == 1:
                 # single-bucket layout (a frontier below ~1M rows): the dirty
-                # set is trivially {0}, so the growth count rides an
+                # set is trivially {0}, so the growth values ride an
                 # Observation on the merge write itself — NO pre-write job
-                # runs at all. (the cached pre-observe frame goes to scratch:
-                # unpersist must target the plan the cache was registered
-                # under, not the CollectMetrics wrapper)
-                scratch.append(new_rows)
+                # runs at all. The observe sits below the admitted-rows
+                # filter, so it also sees the shard rows.
                 grow_obs = Observation(f"epoch-{epoch}-growth")
-                new_rows = new_rows.observe(grow_obs, F.count(F.lit(1)).alias("n"))
+                grow_src = grow_src.observe(grow_obs, *growth)
                 new_bkts = [0]
             else:
                 # bucketed layout (the 10^10 path): the dirty-bucket set must
                 # be known BEFORE the merge to scope its reads, so one tiny
-                # job returns both the growth count and the new rows' buckets
-                # (collect_set over <= n_buckets ints — VERDICT r2 item 1b)
+                # job over the cached frame returns all three values
                 with prof.step("growth_agg"):
-                    grow = new_rows.agg(
-                        F.count("*"),
-                        F.collect_set(F.pmod(F.col("host_hash"), F.lit(nb)).cast("int")),
-                    ).collect()[0]
-                stats.new_urls = int(grow[0])
-                new_bkts = [int(b) for b in (grow[1] or [])]
+                    grow = grow_src.agg(*growth).collect()[0].asDict()
+                stats.new_urls = int(grow["n"])
+                new_bkts = [int(b) for b in (grow["bkts"] or [])]
+            new_rows = admitted_rows(grow_src) if tagged is not None else grow_src
 
             # 4. status write-back + retryable-failed re-enqueue + new-row
             # admission, all in ONE dirty-bucket merge: buckets holding
@@ -857,10 +870,17 @@ class CrawlJob:
         stats.blocked = int(agg["blocked"] or 0)
         stats.bytes_fetched = int(agg["bytes"] or 0)
         if grow_obs is not None:
-            stats.new_urls = int(grow_obs.get["n"] or 0)
-        if self.cfg.dedup and self.cfg.bloom_prefilter and stats.new_urls:
+            grow = grow_obs.get
+            stats.new_urls = int(grow["n"] or 0)
+        # the folded shards commit AFTER the frontier (resume() rebuilds the
+        # seen set, covering a kill between the two commits); an epoch that
+        # admits nothing emits no shard and skips the commit
+        seen_dirty = sorted(int(b) for b in (grow.get("seen_bkts") or []))
+        if seen_dirty:
             with prof.step("seen_fold"):
-                self._fold_into_seen(new_rows.select("url_hash"), tag=f"epoch-{epoch}")
+                self.seen_t.merge_buckets(
+                    seen_shards(tagged), seen_dirty, tag=f"epoch-{epoch}"
+                )
 
         # proxy rotation feedback (W2 loop): fold this epoch's blocked /
         # check-failed outcomes into the pool and persist, so next epoch's
@@ -884,7 +904,6 @@ class CrawlJob:
         claimed.unpersist()
         light.unpersist()
         results.unpersist()
-        new_rows.unpersist()
         for df in scratch:
             df.unpersist()
 

@@ -25,7 +25,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from crawling_infrastructure_spark.operators.frontier import FRONTIER_COLS, frontier_rows
 from crawling_infrastructure_spark.operators.robots import filter_allowed
-from crawling_infrastructure_spark.operators.seen import filter_unseen
+from crawling_infrastructure_spark.operators.seen import SHARD, admitted_rows, seen_shards
 from crawling_infrastructure_spark.plans.epoch import CrawlJob
 
 SEED_STREAM_SCHEMA = T.StructType([T.StructField("value", T.StringType(), True)])
@@ -53,41 +53,45 @@ def run_seed_ingest(
 
     foreachBatch gives us the batch DataFrame + a monotonically increasing
     batch_id; inside the closure we run the SAME admission plan the epoch
-    loop uses — robots filter, bloom-prefiltered exact dedup when the seen
-    table exists, and a *bucket append* (catalog.BucketedTable.append_buckets)
-    so per-batch write volume is O(batch), never O(frontier). Admitted
-    hashes are folded into the seen blooms immediately: an epoch interleaved
-    with the stream must see streamed URLs as bloom-positives, or a later
-    duplicate outlink would skip the exact anti-join and break the EXACT
-    dedup invariant.
+    loop uses — robots filter, then, when the seen table exists, the
+    one-pass seen admission (operators/seen.filter_unseen: one cached
+    tagged frame of admitted rows + folded seen shards). The admitted rows
+    land as a *bucket append* (catalog.BucketedTable.append_buckets), so
+    per-batch write volume is O(batch), never O(frontier); the shards then
+    commit over their seen buckets, so an epoch interleaved with the stream
+    finds the streamed URLs in the seen set and the dedup stays EXACT.
+    Without a seen table the batch anti-joins the frontier.
     """
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
         rows = frontier_rows(batch_df, priority, epoch=0)
         if job.cfg.respect_robots:
             rows = filter_allowed(rows, spark, job.robots)
+        tag = f"stream-batch-{batch_id}"
         if not job.frontier_t.exists():
-            job.frontier_t.write_full(rows, tag=f"stream-batch-{batch_id}")
+            job.frontier_t.write_full(rows, tag=tag)
+            return
+        if job.cfg.dedup and job.cfg.bloom_prefilter and job.seen_t.exists():
+            tagged = job._admit_unseen(rows).cache()
+            grow = tagged.agg(
+                F.count(F.when(~F.col(SHARD), 1)).alias("n"),
+                F.collect_set(F.when(F.col(SHARD), F.col("bucket_id"))).alias("seen_bkts"),
+            ).collect()[0]
+            if grow["n"]:
+                job.frontier_t.append_buckets(
+                    admitted_rows(tagged).select(*FRONTIER_COLS), tag=tag
+                )
+                job.seen_t.merge_buckets(
+                    seen_shards(tagged), sorted(grow["seen_bkts"]), tag=tag
+                )
+            tagged.unpersist()
             return
         current = job.frontier_t.read(spark)
-        scratch: list = []
-        if job.cfg.dedup and job.cfg.bloom_prefilter and job.seen_t.exists():
-            rows = filter_unseen(
-                rows, job.seen_t.read(spark), job.cfg.seen_buckets,
-                scratch=scratch,
-            )
-        else:
-            rows = rows.join(current.select("url_hash"), "url_hash", "left_anti")
+        rows = rows.join(current.select("url_hash"), "url_hash", "left_anti")
         rows = rows.select(*FRONTIER_COLS).cache()
         if rows.count():
-            job.frontier_t.append_buckets(rows, tag=f"stream-batch-{batch_id}")
-            if job.seen_t.exists():
-                job._fold_into_seen(
-                    rows.select("url_hash"), tag=f"stream-batch-{batch_id}"
-                )
+            job.frontier_t.append_buckets(rows, tag=tag)
         rows.unpersist()
-        for df in scratch:
-            df.unpersist()
 
     q = (
         seed_stream(spark, seeds_dir)

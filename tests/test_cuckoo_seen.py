@@ -3,10 +3,11 @@ kind='cuckoo') — the north_rule's "bloom/cuckoo URL-seen set" second leg.
 
 Exactness of the seen set never depends on the filter; these tests pin the
 filter contract (no false negatives, fpp band, deletion, saturation
-fallback, serialization dispatch), the seen-path equivalence (cuckoo-backed
-filter_unseen returns the identical row set as bloom-backed and as a plain
-anti-join), the incremental-fold invariant, the retire/recrawl path, and
-the epoch loop end-to-end under cfg.seen_prefilter='cuckoo'.
+fallback, serialization dispatch), the one-pass admission under both
+kinds (filter_unseen's admitted rows and folded shards, exact against a
+plain Python set, including degenerate inputs and 64-bit values), the
+incremental-fold invariant, the retire/recrawl path, and the epoch loop
+end-to-end under cfg.seen_prefilter='cuckoo'.
 """
 
 from __future__ import annotations
@@ -84,72 +85,172 @@ def test_prefilter_blob_dispatch():
 
 
 # --------------------------------------------------------------- seen level
+#
+# filter_unseen admits and folds in one pass; every case below checks its
+# two outputs exactly against a plain Python set: the admitted rows, and
+# the folded shards (one per bucket that admitted anything, holding the
+# bucket's prior keys plus its admitted ones).
+
+NB = 8
 
 
 def _hash_df(spark, arr):
     return spark.createDataFrame(
-        [(int(np.int64(x)),) for x in arr], schema="url_hash long"
+        [(int(x),) for x in arr], schema="url_hash long"
     )
+
+
+def _cand_row(h):
+    return (f"u{h}", h, h ^ 0x5A5A, h ^ 0x33)
+
+
+def _cand_df(spark, hashes):
+    """Candidate rows carrying three 64-bit columns, so any float round
+    trip of the tagged union would show in the admitted rows."""
+    return spark.createDataFrame(
+        [_cand_row(h) for h in hashes],
+        schema="url string, url_hash long, host_hash long, seq long",
+    )
+
+
+def _admit(spark, cand, seen, kind):
+    """(admitted rows as tuples, {bucket_id: shard row})."""
+    from crawling_infrastructure_spark.operators.seen import (
+        admitted_rows,
+        filter_unseen,
+        seen_shards,
+    )
+
+    tagged = filter_unseen(cand, seen, NB, 1e-3, kind=kind).cache()
+    try:
+        rows = [
+            (r.url, r.url_hash, r.host_hash, r.seq)
+            for r in admitted_rows(tagged).collect()
+        ]
+        shards = {r.bucket_id: r for r in seen_shards(tagged).collect()}
+    finally:
+        tagged.unpersist()
+    return rows, shards
+
+
+def _commit(spark, seen, shards):
+    """The seen table after merging ``shards`` over their buckets."""
+    from crawling_infrastructure_spark.schema import SEEN_SCHEMA
+
+    kept = [r for r in seen.collect() if r.bucket_id not in shards]
+    return spark.createDataFrame(kept + list(shards.values()), SEEN_SCHEMA)
+
+
+def _check_shards(shards, prior: set[int], new: set[int], kind):
+    assert set(shards) == {h % NB for h in new}
+    for b, r in shards.items():
+        want = {h for h in prior | new if h % NB == b}
+        got = np.frombuffer(bytes(r.hashes), dtype=np.uint64)
+        assert (np.diff(got) > 0).all(), "packed hashes must stay sorted unique"
+        assert {int(x) for x in got.view(np.int64)} == want
+        assert r.n_items == len(want)
+        filt = deserialize_prefilter(bytes(r.bloom))
+        assert isinstance(filt, Cuckoo if kind == "cuckoo" else Bloom)
+        assert filt.contains(got).all(), "folded filter has a false negative"
 
 
 @pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
 def test_filter_unseen_exact_under_both_kinds(spark, kind):
-    from crawling_infrastructure_spark.operators.seen import (
-        build_seen,
-        filter_unseen,
-        update_seen,
-    )
+    from crawling_infrastructure_spark.operators.seen import build_seen
 
-    seen_keys = _keys(4_000)
-    new_keys = _keys(3_000, seed=23)
-    truly_new = new_keys[~np.isin(new_keys, seen_keys)]
+    seen_keys = {int(x) for x in _keys(4_000)}
+    new_keys = {int(x) for x in _keys(3_000, seed=23)}
+    # a third of the candidates are already seen: tier 2 must drop them
+    cands = new_keys | set(sorted(seen_keys)[::3])
+    seen = build_seen(_hash_df(spark, sorted(seen_keys)), NB, 1e-3, kind=kind)
 
-    seen = build_seen(_hash_df(spark, seen_keys), 8, 1e-3, kind=kind)
-    cand = _hash_df(spark, new_keys).withColumn(
-        "url", F.concat(F.lit("u"), F.col("url_hash"))
-    )
-    scratch: list = []
-    got = {
-        r.url_hash
-        for r in filter_unseen(cand, seen, 8, scratch=scratch).collect()
+    rows, shards = _admit(spark, _cand_df(spark, sorted(cands)), seen, kind)
+    want = cands - seen_keys
+    assert sorted(rows) == sorted(_cand_row(h) for h in want)
+    _check_shards(shards, seen_keys, want, kind)
+
+    # commit the shards and re-offer everything: nothing passes, no shard
+    seen2 = _commit(spark, seen, shards)
+    rows2, shards2 = _admit(spark, _cand_df(spark, sorted(cands)), seen2, kind)
+    assert rows2 == [] and shards2 == {}
+
+
+def test_cuckoo_fold_is_incremental(spark):
+    """kind='cuckoo': a fold that fits the prior filter inserts only the
+    fresh keys into it (same table size, n_items grows by the fresh count)."""
+    from crawling_infrastructure_spark.operators.seen import build_seen
+
+    seen_keys = [int(x) for x in _keys(2_000)]
+    fresh = [int(x) for x in _keys(200, seed=5)]
+    seen = build_seen(_hash_df(spark, seen_keys), NB, 1e-3, kind="cuckoo")
+    before = {
+        r.bucket_id: deserialize_prefilter(bytes(r.bloom)) for r in seen.collect()
     }
-    assert got == {int(np.int64(x)) for x in truly_new}
-    for df in scratch:
-        df.unpersist()
+    _, shards = _admit(spark, _cand_df(spark, fresh), seen, "cuckoo")
+    for b, r in shards.items():
+        after = deserialize_prefilter(bytes(r.bloom))
+        n_fresh = sum(1 for h in fresh if h % NB == b)
+        assert len(after.table) == len(before[b].table)
+        assert after.n_items == before[b].n_items + n_fresh
 
-    # fold the admitted keys and re-check: everything now filters out
-    seen2 = update_seen(seen, _hash_df(spark, truly_new), 8, 1e-3, kind=kind)
-    scratch2: list = []
-    again = filter_unseen(cand, seen2, 8, scratch=scratch2).count()
-    assert again == 0
-    for df in scratch2:
-        df.unpersist()
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_filter_unseen_degenerate_inputs(spark, kind):
+    from crawling_infrastructure_spark.operators.seen import build_seen
+
+    low = [h for h in (int(x) for x in _keys(3_000)) if h % NB in (0, 1)]
+    high = [h for h in (int(x) for x in _keys(3_000, seed=9)) if h % NB in (5, 6)]
+    seen = build_seen(_hash_df(spark, low), NB, 1e-3, kind=kind)
+
+    # empty candidates: no rows, no shard
+    empty = spark.createDataFrame(
+        [], "url string, url_hash long, host_hash long, seq long"
+    )
+    assert _admit(spark, empty, seen, kind) == ([], {})
+
+    # candidates only in buckets with no seen row: all admitted, and each
+    # receiving bucket gets a shard built from scratch
+    rows, shards = _admit(spark, _cand_df(spark, high), seen, kind)
+    assert sorted(rows) == sorted(_cand_row(h) for h in high)
+    _check_shards(shards, set(), set(high), kind)
+
+    # every candidate already seen: no rows, no shard
+    assert _admit(spark, _cand_df(spark, low[::2]), seen, kind) == ([], {})
+
+
+@pytest.mark.parametrize("kind", ["bloom", "cuckoo"])
+def test_filter_unseen_keeps_64bit_values_exact(spark, kind):
+    """Hashes above 2^53 collide as float64 (2^53+1 -> 2^53, 2^53+3 ->
+    2^53+4): the admitted rows and the shards must carry them bit-exact."""
+    from crawling_infrastructure_spark.operators.seen import build_seen
+
+    big = 2**53
+    seen_keys = {big, big + 2, big + 4, 2**62 + 8, -(2**62)}
+    cands = {
+        big + 1, big + 3, big + 5, big + 2, 2**62 + 1, 2**62 + 9,
+        2**63 - 1, -(2**63), -(2**62) + 1, -(big + 7),
+    }
+    seen = build_seen(_hash_df(spark, sorted(seen_keys)), NB, 1e-3, kind=kind)
+    rows, shards = _admit(spark, _cand_df(spark, sorted(cands)), seen, kind)
+    want = cands - seen_keys
+    assert sorted(rows) == sorted(_cand_row(h) for h in want)
+    _check_shards(shards, seen_keys, want, kind)
 
 
 def test_retire_seen_readmits(spark):
     from crawling_infrastructure_spark.operators.seen import (
         build_seen,
-        filter_unseen,
         retire_seen,
     )
 
-    keys = _keys(2_000)
+    keys = [int(x) for x in _keys(2_000)]
     retired = keys[:500]
     for kind in ("bloom", "cuckoo"):
-        seen = build_seen(_hash_df(spark, keys), 8, 1e-3, kind=kind)
-        seen2 = retire_seen(seen, _hash_df(spark, retired), 8, 1e-3, kind=kind)
-        cand = _hash_df(spark, keys).withColumn(
-            "url", F.concat(F.lit("u"), F.col("url_hash"))
-        )
-        scratch: list = []
-        got = {
-            r.url_hash
-            for r in filter_unseen(cand, seen2, 8, scratch=scratch).collect()
-        }
+        seen = build_seen(_hash_df(spark, keys), NB, 1e-3, kind=kind)
+        seen2 = retire_seen(seen, _hash_df(spark, retired), NB, 1e-3, kind=kind)
+        rows, _ = _admit(spark, _cand_df(spark, keys), seen2, kind)
         # exactly the retired keys are admissible again
-        assert got == {int(np.int64(x)) for x in retired}, kind
-        for df in scratch:
-            df.unpersist()
+        assert {r[1] for r in rows} == set(retired), kind
         # still-seen counts survive in the shard metadata
         n = sum(r.n_items for r in seen2.collect())
         assert n == len(keys) - len(retired)

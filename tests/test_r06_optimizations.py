@@ -64,6 +64,28 @@ def test_staged_dot_bit_identical_to_fold(emb):
     assert got == 0
 
 
+@pytest.mark.parametrize(
+    "rows, dot",
+    [
+        ([(i, []) for i in range(4)], 0.0),     # uniformly empty vectors
+        ([(i, None) for i in range(4)], None),  # all-null vector column
+    ],
+    ids=["empty", "all_null"],
+)
+def test_fixed_dim_degenerate_vectors_fall_back_to_fold(spark, rows, dot):
+    """Neither input has a positive uniform width, so _fixed_dim must
+    return None and with_staged_dot take the fold; a width of 0 or -1 once
+    skipped the _dot column (UNRESOLVED_COLUMN on the first use)."""
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    dim = _fixed_dim(vecs, "embedding")
+    assert dim is None
+    pairs = vecs.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea")).crossJoin(
+        vecs.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
+    )
+    got = with_staged_dot(pairs, "ea", "eb", "_dot", dim).select("_dot").collect()
+    assert [r._dot for r in got] == [dot] * 16
+
+
 def test_norm_expr_bit_identical_to_fold(emb):
     dim = _fixed_dim(emb, "embedding")
     fold = F.sqrt(

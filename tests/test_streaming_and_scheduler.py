@@ -3,6 +3,7 @@ dedup) and the multi-task priority scheduler."""
 
 import os
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -44,6 +45,32 @@ def test_seed_stream_ingest_dedups_across_batches(spark, corpus, tmp_path):
     # re-running with no new files must be a no-op (exactly-once source)
     run_seed_ingest(spark, str(seeds_dir), job, str(ckpt))
     assert job.frontier_t.read(spark).count() == 6
+
+
+def test_seed_stream_ingest_through_seen_set(spark, corpus, tmp_path):
+    """With a seen table (built by init_task) every micro-batch runs the
+    one-pass seen admission: duplicates drop, the admitted hashes land in
+    the seen shards, and an all-duplicate batch commits nothing."""
+    seeds_dir = tmp_path / "seeds_in"
+    ckpt = tmp_path / "ckpt"
+    os.makedirs(seeds_dir)
+    cfg = TaskConfig(task_id="stream_seen", max_items_per_second=1, seen_buckets=4)
+    job = CrawlJob(spark, str(tmp_path / "cat"), corpus, cfg, outcome_fn=fetch_outcome)
+    job.init_task(seeds_from_list(spark, seed_urls(4)))
+
+    (seeds_dir / "batch1.txt").write_text("\n".join(seed_urls(6)) + "\n")
+    run_seed_ingest(spark, str(seeds_dir), job, str(ckpt))
+    hashes = [r.url_hash for r in job.frontier_t.read(spark).collect()]
+    assert len(hashes) == len(set(hashes)) == 6
+    seen = set()
+    for r in job.seen_t.read(spark).collect():
+        seen |= set(np.frombuffer(bytes(r.hashes), dtype=np.int64).tolist())
+    assert seen == set(hashes)
+
+    versions = (job.frontier_t.current_version(), job.seen_t.current_version())
+    (seeds_dir / "batch2.txt").write_text("\n".join(seed_urls(3)) + "\n")
+    run_seed_ingest(spark, str(seeds_dir), job, str(ckpt))
+    assert (job.frontier_t.current_version(), job.seen_t.current_version()) == versions
 
 
 def test_windowed_progress_availablenow(spark, tmp_path):
