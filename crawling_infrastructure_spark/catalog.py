@@ -139,10 +139,6 @@ class Table:
                 return spark.read.parquet(*v["dirs"])
         raise KeyError(f"{self.name}: no version {version}")
 
-    def version_by_tag(self, tag: str) -> int | None:
-        hits = [v["version"] for v in self._load()["versions"] if v.get("tag") == tag]
-        return max(hits) if hits else None
-
     def rollback(self, version: int) -> None:
         """Make an older snapshot current (Iceberg rollback_to_snapshot) —
         the resume path after a killed job."""
@@ -225,8 +221,6 @@ class BucketedTable(Table):
     - ``append_buckets(df)``: df rows are appended; only buckets receiving
       rows gain a dir (streaming admission — per-batch write volume is
       O(batch), independent of frontier size).
-    - ``compact(spark)``: rewrite every bucket to one dir (the Iceberg
-      rewrite_data_files maintenance action for append-heavy buckets).
 
     Bucket id = ``pmod(key, n_buckets)`` — non-negative even for signed
     xxhash64 keys; for tables already keyed by a bucket ordinal in
@@ -436,9 +430,6 @@ class BucketedTable(Table):
         if schema is None:
             raise FileNotFoundError(f"table {self.name}: no data in buckets {bucket_ids}")
         return spark.createDataFrame([], schema)
-
-    def compact(self, spark: SparkSession, tag: str | None = "compact") -> int:
-        return self.write_full(self.read(spark), tag)
 
     def compact_small(
         self, spark: SparkSession, max_dirs: int = 8, tag: str | None = "compact"

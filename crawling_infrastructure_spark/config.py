@@ -72,7 +72,6 @@ class TaskConfig:
     # pairs append to a neardup_pairs table. Off by default — it is an
     # LLM-corpus concern, not reference crawl semantics.
     neardup_pages: bool = False
-    neardup_num_perm: int = 32
     neardup_threshold: float = 0.8
     # benchmark-decontamination audit on admitted pages: when CrawlJob is
     # given an eval_docs frame, each epoch's completed pages are probed
@@ -80,9 +79,8 @@ class TaskConfig:
     # rows append to a contam_{task} table (flag-only — the DROP decision
     # belongs to the downstream funnel, corpus.build_training_corpus).
     decontam_window: int = 8
-    # Bloom filter sizing for the seen-set scale path
+    # seen-set shard count (operators/seen.py; the bloom fpp is fixed there)
     seen_buckets: int = 32
-    bloom_fpp: float = 0.001
     # tier-1 seen-set filter: 'bloom' (rebuild-on-touch) or 'cuckoo'
     # (incremental O(batch) folds + in-place deletion for retire/recrawl —
     # north_rule names both; see operators/seen.py)
@@ -114,32 +112,6 @@ class TaskConfig:
     # at sandbox scale the exact anti-join alone is cheaper — both paths are
     # exact, this only moves work (see operators/seen.py)
     bloom_prefilter: bool = True
-    # pages write path: when an epoch claims <= this many rows, the raw html
-    # rides through the fetch UDF (one corpus scan per epoch, html emitted
-    # from the Arrow batch) and the pages append reads it from the persisted
-    # fetch output. Above it, html is stripped from the Python stage (Arrow
-    # round-trip of ~30 KB/row dominates) and re-attached JVM-side with a
-    # semi-join — two extra corpus scans, the right trade only for giant
-    # epochs over a corpus whose scan is cheap relative to batch volume.
-    carry_html_max_rows: int = 1_000_000
-    # claims at or above this size resolve against the corpus with a
-    # SHUFFLE_HASH join hint (operators/fetch.resolve_against_corpus):
-    # a claim-all batch otherwise broadcasts and hands the Python fetch the
-    # corpus scan's byte-balanced but ROW-skewed splits (measured 4-17x
-    # fetch slowdown at 100k rows). Politeness-bounded epochs stay below
-    # this and keep the shuffle-free broadcast-resolve plan.
-    fetch_shuffle_min_rows: int = 25_000
-    # fetch-output persist level: DISK_ONLY guarantees the one expensive
-    # Python pass never re-executes when the batch is too big for the
-    # storage pool (round-2 lesson: a plain MEMORY_ONLY cache silently
-    # evicts and re-ran the fetch 3x); below this row count MEMORY_AND_DISK
-    # keeps the batch in memory (spilling, never recomputing) and skips the
-    # disk write+read cycle entirely — measured: forcing a 100k-row
-    # html-carrying batch (~2.5 GB) through DISK_ONLY cost the pages and
-    # merge consumers ~100 s each re-reading it from the (slow, shared)
-    # container disk. Threshold aligned with carry_html_max_rows: above it
-    # strip mode drops the heavy columns anyway.
-    disk_persist_min_rows: int = 1_000_000
     # snapshot GC: every K epochs expire all but the last `snapshot_keep`
     # versions of every task table (Iceberg expire_snapshots). Without it a
     # longliving crawl grows one manifest version + one dir-set per epoch

@@ -199,7 +199,9 @@ def ngram_jaccard_pairs(
     # map over them is the memory hot spot — more, smaller tasks keep the
     # maps in cache and off the spill path (guide §5 "more partitions,
     # smaller per-task state"; interleaved A/B: 20.4 s -> 14.9 s clean,
-    # 84 s -> 20 s under memory-pressure weather)
+    # 84 s -> 20 s under memory-pressure weather). This holds only while
+    # the `wh` join below compiles as a broadcast join, which keeps the
+    # probe side's partitioning; a shuffle join on `wh` discards it.
     par = sh.sparkSession.sparkContext.defaultParallelism
     a = sh.select(F.col("doc_id").alias("doc_a"), "wh").repartition(4 * par, "doc_a")
     b = sh.select(F.col("doc_id").alias("doc_b"), "wh")

@@ -80,7 +80,8 @@ class HermeticFetcher:
     outcome_fn: object = None  # callable (url, epoch) -> outcome str
     func: CrawlFunction = field(default_factory=CrawlFunction)
     # carry the raw html of completed rows through the result frame (one
-    # corpus scan per epoch; see FETCH_RESULT_SCHEMA note / cfg.carry_html_max_rows)
+    # corpus scan per epoch; see FETCH_RESULT_SCHEMA note and
+    # plans/epoch._GIANT_EPOCH_ROWS)
     carry_html: bool = False
     # store_browser_debug (config.ts:233-234, default false): failed rows
     # carry worker.getDebugInfo() — {screen_b64, document}

@@ -63,6 +63,11 @@ from crawling_infrastructure_spark.functions.cuckoo import (
 )
 from crawling_infrastructure_spark.schema import SEEN_SCHEMA
 
+# design false-positive rate of a bloom shard (a cuckoo's is fixed by its
+# fingerprint width, ~1.2e-4): ~0.1% of genuinely new candidates pay the
+# exact check in step 2
+_BLOOM_FPP = 1e-3
+
 
 def bucket_expr(url_hash_col, n_buckets: int):
     return F.pmod(url_hash_col, F.lit(n_buckets)).cast("int")
@@ -89,26 +94,22 @@ def _member(arr: np.ndarray, keys: np.ndarray) -> np.ndarray:
     return present
 
 
-def _prefilter_for(arr: np.ndarray, fpp: float, kind: str = "bloom") -> bytes:
+def _prefilter_for(arr: np.ndarray, kind: str = "bloom") -> bytes:
     """Build a tier-1 filter blob from scratch over the full key array.
-    kind='bloom' (rebuild-on-touch semantics) or 'cuckoo' (fpp is fixed by
-    the fingerprint width, ~1.2e-4; the parameter is accepted for a uniform
-    signature). Both land in the same self-describing blob column."""
+    kind='bloom' (rebuild-on-touch semantics) or 'cuckoo'. Both land in the
+    same self-describing blob column."""
     if kind == "cuckoo":
         c = Cuckoo.sized(max(1 << 16, len(arr)))
         if len(arr):
             c.add(arr)
         return c.serialize()
-    b = Bloom.sized(max(1 << 16, len(arr)), fpp)
+    b = Bloom.sized(max(1 << 16, len(arr)), _BLOOM_FPP)
     if len(arr):
         b.add(arr)
     return b.serialize()
 
 
-def build_seen(
-    hashes: DataFrame, n_buckets: int, fpp: float,
-    expected_per_bucket: int = 1 << 16, kind: str = "bloom",
-) -> DataFrame:
+def build_seen(hashes: DataFrame, n_buckets: int, kind: str = "bloom") -> DataFrame:
     """hashes['url_hash'] -> seen table (tier-1 filter blob + packed sorted
     hash array per bucket). ``kind`` picks the filter ('bloom'|'cuckoo' —
     north_rule names both; blobs are self-describing so a table can even
@@ -117,7 +118,7 @@ def build_seen(
 
     def make(pdf: pd.DataFrame) -> pd.DataFrame:
         packed, n = _pack(pdf["url_hash"].to_numpy())
-        blob = _prefilter_for(_unpack(packed), fpp, kind)
+        blob = _prefilter_for(_unpack(packed), kind)
         return pd.DataFrame(
             {
                 "bucket_id": [int(pdf["bucket_id"].iloc[0])],
@@ -135,8 +136,7 @@ def build_seen(
 
 
 def retire_seen(
-    seen: DataFrame, retire_hashes: DataFrame, n_buckets: int, fpp: float,
-    kind: str = "bloom",
+    seen: DataFrame, retire_hashes: DataFrame, n_buckets: int, kind: str = "bloom"
 ) -> DataFrame:
     """REMOVE url_hashes from the seen state — the recrawl/TTL/blacklist
     path: a retired URL becomes admissible again on its next sighting.
@@ -164,7 +164,7 @@ def retire_seen(
                 filt.delete(gone)  # in place: O(retired), not O(state)
                 blob = filt.serialize()
             else:
-                blob = _prefilter_for(merged, fpp, kind)
+                blob = _prefilter_for(merged, kind)
         return pd.DataFrame(
             {
                 "bucket_id": [bid],
@@ -186,7 +186,7 @@ SHARD = "_shard"
 _SEEN_COLS = [f.name for f in SEEN_SCHEMA.fields]
 
 
-def _fold_filter(filt, fresh: np.ndarray, merged: np.ndarray, fpp: float, kind: str) -> bytes:
+def _fold_filter(filt, fresh: np.ndarray, merged: np.ndarray, kind: str) -> bytes:
     """Tier-1 blob after folding ``fresh`` into a shard now holding
     ``merged``. kind='bloom': rebuilt right-sized from the merged exact
     count — O(state) adds, the same order as the unavoidable blob
@@ -203,7 +203,7 @@ def _fold_filter(filt, fresh: np.ndarray, merged: np.ndarray, fpp: float, kind: 
     ):
         filt.add(fresh)
         return filt.serialize()
-    return _prefilter_for(merged, fpp, kind)
+    return _prefilter_for(merged, kind)
 
 
 def _nullable(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -226,11 +226,7 @@ def _tagged(rows: pd.DataFrame, shard: pd.DataFrame) -> pd.DataFrame:
 
 
 def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame,
-    n_buckets: int,
-    fpp: float,
-    kind: str = "bloom",
+    candidates: DataFrame, seen: DataFrame, n_buckets: int, kind: str = "bloom"
 ) -> DataFrame:
     """EXACT new-URL admission in one cogroup per seen bucket (module
     docstring): candidates whose url_hash is absent from the seen set pass,
@@ -278,7 +274,7 @@ def filter_unseen(
         shard = pd.DataFrame({
             "bucket_id": [int(cand_pdf["bucket_id"].iloc[0])],
             "n_items": [len(merged)],
-            "bloom": [_fold_filter(filt, fresh, merged, fpp, kind)],
+            "bloom": [_fold_filter(filt, fresh, merged, kind)],
             "hashes": [merged.tobytes()],
             SHARD: [True],
         })

@@ -75,10 +75,10 @@ PAGES_SCHEMA = T.StructType(
 # item_key = CrawlFunction.get_key(url) — the reference's md5 item id the
 # worker stores results under (F10, crawler/src/worker.ts getKey).
 # html is populated only for completed rows and only when the epoch runs in
-# carry mode (cfg.carry_html_max_rows): one corpus scan per epoch, the pages
-# append reads html from the persisted fetch output. Strip mode (giant
-# epochs) emits NULL here and re-attaches html JVM-side — the Arrow
-# round-trip of raw bytes doubles the Python stage's serialized volume.
+# carry mode (claims up to plans/epoch._GIANT_EPOCH_ROWS): one corpus scan
+# per epoch, the pages append reads html from the persisted fetch output.
+# Strip mode (giant epochs) emits NULL here and re-attaches html JVM-side —
+# the Arrow round-trip of raw bytes doubles the Python stage's serialized volume.
 FETCH_RESULT_SCHEMA = T.StructType(
     [
         T.StructField("url", T.StringType(), False),

@@ -121,7 +121,7 @@ def _admit(spark, cand, seen, kind):
         seen_shards,
     )
 
-    tagged = filter_unseen(cand, seen, NB, 1e-3, kind=kind).cache()
+    tagged = filter_unseen(cand, seen, NB, kind=kind).cache()
     try:
         rows = [
             (r.url, r.url_hash, r.host_hash, r.seq)
@@ -162,7 +162,7 @@ def test_filter_unseen_exact_under_both_kinds(spark, kind):
     new_keys = {int(x) for x in _keys(3_000, seed=23)}
     # a third of the candidates are already seen: tier 2 must drop them
     cands = new_keys | set(sorted(seen_keys)[::3])
-    seen = build_seen(_hash_df(spark, sorted(seen_keys)), NB, 1e-3, kind=kind)
+    seen = build_seen(_hash_df(spark, sorted(seen_keys)), NB, kind=kind)
 
     rows, shards = _admit(spark, _cand_df(spark, sorted(cands)), seen, kind)
     want = cands - seen_keys
@@ -182,7 +182,7 @@ def test_cuckoo_fold_is_incremental(spark):
 
     seen_keys = [int(x) for x in _keys(2_000)]
     fresh = [int(x) for x in _keys(200, seed=5)]
-    seen = build_seen(_hash_df(spark, seen_keys), NB, 1e-3, kind="cuckoo")
+    seen = build_seen(_hash_df(spark, seen_keys), NB, kind="cuckoo")
     before = {
         r.bucket_id: deserialize_prefilter(bytes(r.bloom)) for r in seen.collect()
     }
@@ -200,7 +200,7 @@ def test_filter_unseen_degenerate_inputs(spark, kind):
 
     low = [h for h in (int(x) for x in _keys(3_000)) if h % NB in (0, 1)]
     high = [h for h in (int(x) for x in _keys(3_000, seed=9)) if h % NB in (5, 6)]
-    seen = build_seen(_hash_df(spark, low), NB, 1e-3, kind=kind)
+    seen = build_seen(_hash_df(spark, low), NB, kind=kind)
 
     # empty candidates: no rows, no shard
     empty = spark.createDataFrame(
@@ -230,7 +230,7 @@ def test_filter_unseen_keeps_64bit_values_exact(spark, kind):
         big + 1, big + 3, big + 5, big + 2, 2**62 + 1, 2**62 + 9,
         2**63 - 1, -(2**63), -(2**62) + 1, -(big + 7),
     }
-    seen = build_seen(_hash_df(spark, sorted(seen_keys)), NB, 1e-3, kind=kind)
+    seen = build_seen(_hash_df(spark, sorted(seen_keys)), NB, kind=kind)
     rows, shards = _admit(spark, _cand_df(spark, sorted(cands)), seen, kind)
     want = cands - seen_keys
     assert sorted(rows) == sorted(_cand_row(h) for h in want)
@@ -246,8 +246,8 @@ def test_retire_seen_readmits(spark):
     keys = [int(x) for x in _keys(2_000)]
     retired = keys[:500]
     for kind in ("bloom", "cuckoo"):
-        seen = build_seen(_hash_df(spark, keys), NB, 1e-3, kind=kind)
-        seen2 = retire_seen(seen, _hash_df(spark, retired), NB, 1e-3, kind=kind)
+        seen = build_seen(_hash_df(spark, keys), NB, kind=kind)
+        seen2 = retire_seen(seen, _hash_df(spark, retired), NB, kind=kind)
         rows, _ = _admit(spark, _cand_df(spark, keys), seen2, kind)
         # exactly the retired keys are admissible again
         assert {r[1] for r in rows} == set(retired), kind

@@ -1,8 +1,9 @@
 """Spark jobs per crawl epoch as a measured budget: one bucketed,
 bloom-prefiltered epoch on a fixed fixture must not launch more jobs than
 it does with the one-pass seen admission (operators/seen.filter_unseen).
-Every job the epoch launches runs on the calling thread (the pages append
-is forced serial), so one job group captures them all."""
+The epoch runs as in production, with the pages append overlapped on a
+sibling thread; that thread inherits the caller's job group, so one group
+captures every job the epoch launches."""
 
 from crawling_infrastructure_spark.config import TaskConfig
 from crawling_infrastructure_spark.plans.epoch import CrawlJob
@@ -16,8 +17,7 @@ MAX_JOBS = 36
 GROUP = "epoch-job-budget"
 
 
-def test_bucketed_bloom_epoch_job_budget(spark, corpus, tmp_path, monkeypatch):
-    monkeypatch.setenv("SPARK_GRAFT_NO_OVERLAP", "1")
+def test_bucketed_bloom_epoch_job_budget(spark, corpus, tmp_path):
     cfg = TaskConfig(
         task_id="jobs",
         max_items_per_second=3.0,

@@ -15,6 +15,7 @@ from crawling_infrastructure_spark.catalog import Catalog, suggest_buckets
 from crawling_infrastructure_spark.config import TaskConfig
 from crawling_infrastructure_spark.functions.format import format_bytes
 from crawling_infrastructure_spark.operators.fetch import CrawlFunction
+from crawling_infrastructure_spark.plans import epoch as epoch_mod
 from crawling_infrastructure_spark.plans.epoch import CrawlJob
 from crawling_infrastructure_spark.sources.seeds import seeds_from_list
 from crawling_infrastructure_spark.streaming.stream import streaming_dedup
@@ -107,18 +108,26 @@ def test_reenqueue_pandas_callable_predicate(spark, corpus, tmp_path):
 
 # -- html carry vs strip: identical pages, item_key = getKey(url) ------------
 
-def _run_once(spark, corpus, root, task_id, **cfg_kw):
-    cfg = TaskConfig(task_id=task_id, max_items_per_second=10, **cfg_kw)
+def _run_once(spark, corpus, root, task_id):
+    cfg = TaskConfig(task_id=task_id, max_items_per_second=10)
     job = CrawlJob(spark, root, corpus, cfg, outcome_fn=fetch_outcome)
-    job.run(seeds=seeds_from_list(spark, seed_urls(6)), max_epochs=2)
-    return job
+    history = job.run(seeds=seeds_from_list(spark, seed_urls(6)), max_epochs=2)
+    return job, history
 
 
-def test_carry_and_strip_modes_produce_identical_pages(spark, corpus, tmp_path):
-    carry = _run_once(spark, corpus, str(tmp_path / "c1"), "carry")   # default: carry
-    strip = _run_once(
-        spark, corpus, str(tmp_path / "c2"), "strip", carry_html_max_rows=0
-    )
+def test_carry_and_strip_modes_produce_identical_pages(spark, corpus, tmp_path, monkeypatch):
+    carry, carry_hist = _run_once(spark, corpus, str(tmp_path / "c1"), "carry")
+    # every epoch giant: strip html from the fetch pass, persist its output
+    # DISK_ONLY and cache the light projection
+    monkeypatch.setattr(epoch_mod, "_GIANT_EPOCH_ROWS", 0)
+    strip, strip_hist = _run_once(spark, corpus, str(tmp_path / "c2"), "strip")
+    assert carry_hist == strip_hist and carry_hist[0].claimed > 0
+
+    def frontier(job):
+        rows = job.frontier_t.read(spark).select("url_hash", "status", "retries")
+        return {tuple(r) for r in rows.collect()}
+
+    assert frontier(carry) == frontier(strip)
     cols = ["url", "item_key", "html", "text", "lang"]
     a = {r["url"]: r for r in carry.pages_t.read(spark).select(cols).collect()}
     b = {r["url"]: r for r in strip.pages_t.read(spark).select(cols).collect()}

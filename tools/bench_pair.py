@@ -22,10 +22,9 @@ Usage:
 refs are git refs ('.' = current working tree), optionally suffixed with
 '?KEY=V&KEY2=V2' to inject env vars for that variant only — this turns the
 harness into a paired bisection tool (same tree, one knob flipped), e.g.
-    python tools/bench_pair.py '.' '.?SPARK_GRAFT_NO_OVERLAP=1' 6 overlap.json
-Writes BENCH/ab_pairs.json unless outfile is given. Each trial records the
-per-epoch step profile (SPARK_GRAFT_EPOCH_PROFILE) so a spiked wall can be
-attributed to a step, not just observed.
+    python tools/bench_pair.py '.' '.?SPARK_GRAFT_SHUFFLE_PARTITIONS=32' 6 width.json
+Writes BENCH/ab_pairs.json unless outfile is given. To attribute a spiked
+wall to an epoch step, trace the crawl loop with perfbench/run.py --trace 1.
 
 Env: SPARK_GRAFT_AB_PAGES (default 20000), SPARK_GRAFT_AB_CPUS (default 8).
 """
@@ -80,7 +79,6 @@ def run_once(spec: str, ref: str, extra_env: dict[str, str], cwd: str) -> dict:
         SPARK_GRAFT_CRAWL_PAGES=str(N_PAGES),
         SPARK_GRAFT_CPUS=str(CPUS),
         SPARK_GRAFT_BENCH_MAX_LOAD="9999",  # pairs replace gating
-        SPARK_GRAFT_EPOCH_PROFILE="1",  # attribute spikes to a step
         **extra_env,
     )
     j0, load0 = _stat_jiffies(), _load1()
@@ -98,7 +96,6 @@ def run_once(spec: str, ref: str, extra_env: dict[str, str], cwd: str) -> dict:
         "pages_per_sec": crawl["pages_per_sec"],
         "load_before": load0,
         "host_sys_share": round((j1[0] - j0[0]) / max(j1[1] - j0[1], 1), 3),
-        "profile": [ln for ln in lines if "epoch_profile" in ln],
     }
 
 

@@ -78,7 +78,6 @@ def run_once(cpus: int, max_attempts: int = 4) -> dict:
         SPARK_GRAFT_CRAWL_PAGES=str(N_PAGES),
         SPARK_GRAFT_CORPUS=CORPUS,
         SPARK_GRAFT_BENCH_QUIET_TIMEOUT="0",  # this harness gates quiet itself
-        SPARK_GRAFT_EPOCH_PROFILE="1",  # per-step walls land in the trial record
         # IDENTICAL shuffle width at every level: the scaling comparison
         # must run the same physical plan at N and 4N cores (width is a
         # property of the data); the session default is cpus-wide, which
@@ -132,13 +131,9 @@ def run_once(cpus: int, max_attempts: int = 4) -> dict:
         ):
             if k in top:
                 res[k] = top[k]
-        # keep the epoch profiler's per-step walls (stdout dict lines) and
-        # any task-failure/retry evidence from stderr — the 10x CPU blow-up
-        # trials (wall 400s, cpu 2900s, gc 18s) need step-level attribution
-        res["profile"] = [
-            ln for ln in out.stdout.strip().splitlines()
-            if ln.startswith("{'epoch_profile'")
-        ]
+        # keep any task-failure/retry evidence from stderr — the 10x CPU
+        # blow-up trials (wall 400s, cpu 2900s, gc 18s) need attribution;
+        # per-step cost comes from perfbench/run.py --trace 1
         err_markers = ("Lost task", "FAILED", "OutOfMemory", "Killed",
                        "Retrying", "TaskKilled", "FetchFailed")
         res["stderr_failures"] = {
