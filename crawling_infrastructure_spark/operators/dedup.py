@@ -573,6 +573,7 @@ def embedding_cosine_neardup(
     (block, salt) shuffle join that splits each block's quadratic group
     across the cluster."""
     from crawling_infrastructure_spark.operators.similarity import (
+        _cosine,
         _fixed_dim,
         _norm_expr,
         _parallelism,
@@ -602,7 +603,7 @@ def embedding_cosine_neardup(
         .select(
             "id_a",
             "id_b",
-            F.round(F.col("_dot") / (F.col("na") * F.col("nb")), 4).alias("cosine"),
+            _cosine(F.col("_dot"), F.col("na"), F.col("nb")).alias("cosine"),
         )
         .filter(F.col("cosine") >= threshold)
     )

@@ -144,5 +144,5 @@ class NearDupStore:
             )
             texts = new_docs.unionByName(hist)
         pairs = verify_jaccard_pairs(candidates, texts, self.n, self.threshold)
-        self.table.append_buckets(nb, tag=tag)
+        self.table.append(nb, tag=tag)
         return pairs

@@ -88,13 +88,24 @@ def with_staged_dot(
 
 def _norm_expr(c, dim: int | None):
     """sqrt of the left-assoc sum of squares — same fold the old per-pair
-    _cosine ran, evaluated ONCE per row instead of once per pair."""
+    cosine ran, evaluated ONCE per row instead of once per pair."""
     if dim is None:
         return F.sqrt(F.aggregate(c, F.lit(0.0), lambda a, x: a + x * x))
     acc = F.lit(0.0)
     for i in range(dim):
         acc = acc + c.getItem(i) * c.getItem(i)
     return F.sqrt(acc)
+
+
+def _cosine(dot, na, nb):
+    """round(dot / (na * nb), 4). A pair with a zero-norm side scores -1.0,
+    the value the oracle's DuckDB ``list_cosine_similarity`` gives it (its
+    0/0 NaN clamps to the lower bound): such pairs rank last and never pass
+    a positive threshold, and the guard keeps ANSI mode from raising
+    DIVIDE_BY_ZERO on them. A NULL side (NULL embedding) stays NULL, as in
+    DuckDB: the NULL condition falls through to NULL / NULL."""
+    denom = na * nb
+    return F.round(F.when(denom == 0, F.lit(-1.0)).otherwise(dot / denom), 4)
 
 
 def _parallelism(df: DataFrame) -> int:
@@ -138,7 +149,7 @@ def cosine_topk_bruteforce(
     ).select(
         "query_id",
         "neighbor_id",
-        F.round(F.col("_dot") / (F.col("nq") * F.col("nc")), 4).alias("cosine"),
+        _cosine(F.col("_dot"), F.col("nq"), F.col("nc")).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return (
@@ -181,7 +192,7 @@ def cosine_topk_blocked(
     ).select(
         "query_id",
         "neighbor_id",
-        F.round(F.col("_dot") / (F.col("nq") * F.col("nc")), 4).alias("cosine"),
+        _cosine(F.col("_dot"), F.col("nq"), F.col("nc")).alias("cosine"),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("cosine"), F.asc("neighbor_id"))
     return scored.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
@@ -442,7 +453,7 @@ def semdedup(
     close = (
         with_staged_dot(pairs.filter(F.col("other") < F.col("vec_id")), "ea", "eb", "_dot", dim)
         .filter(
-            F.round(F.col("_dot") / (F.col("na") * F.col("nb")), 4) >= threshold
+            _cosine(F.col("_dot"), F.col("na"), F.col("nb")) >= threshold
         )
         .groupBy("vec_id")
         .agg(F.min("other").alias("dup_of"), F.count("*").alias("n_close"))

@@ -8,23 +8,26 @@ One epoch =
   2. fetch    groupBy(host).applyInPandas state machine (§2.8)
   3. pages    append completed rows to the pages table (S6/S7 collapsed)
   4. merge    frontier status/retries write-back (U1) + failed->initial
-              re-enqueue below retry cap (U2) — DIRTY BUCKETS ONLY: the
-              frontier is bucket(N, host_hash)-partitioned and the merge
-              rewrites just the buckets containing claimed or new rows
+              re-enqueue below retry cap (U2) + the new rows of step 5, in
+              ONE merge: the frontier is bucket(N, host_hash)-partitioned,
+              the merge REWRITES the buckets holding claimed rows and
+              APPENDS the new rows to every other bucket as one new dir
               (Iceberg MERGE INTO semantics; ref per-item update
               crawler/src/crawl_queue.ts:119-149). In the bucketed layout
               (n_buckets > 1, the 10^10-row design point) the cost is
-              O(dirty buckets), never O(frontier); the single-bucket layout
-              that suggest_buckets picks for sub-1M-row frontiers
-              deliberately trades this for a plain whole-table write — at
-              that scale one write task beats bucket machinery (measured,
-              round 3).
+              O(touched buckets), never O(frontier); the single-bucket
+              layout that suggest_buckets picks for sub-1M-row frontiers
+              is the same merge with one bucket, i.e. a plain whole-table
+              write — at that scale one write task beats bucket machinery
+              (measured, round 3). A bucket already at _FRONTIER_MAX_DIRS
+              dirs is rewritten too, which bounds the appended dirs.
   5. grow     outlinks -> canonicalize -> robots -> one-pass seen
               admission (S5+J3, operators/seen.filter_unseen: tier-1
               filter probe, exact check of the positives and the shard
               fold in one cogroup per seen bucket, cached once) -> new
-              initial rows, written with the same merge; the folded seen
-              shards commit right after the frontier
+              initial rows, written by the step-4 merge; their count and
+              the seen buckets to fold ride an Observation on that write,
+              and the folded seen shards commit right after the frontier
   6. metrics  per-host lineage rows (worker_meta analogue)
   7. tag      snapshot 'epoch-K' on every table — the checkpoint
 
@@ -33,14 +36,16 @@ never contains a FAILED row with retries < retry cap (every epoch re-flips
 those to initial before committing, and no other writer produces failed
 rows), so reenqueue_failed restricted to dirty buckets equals the full scan.
 
-Kill the driver at ANY point: resume() heals running->initial (U4) from the
+Kill the driver at ANY point: resume() rolls the per-epoch append tables
+back to the last completed epoch, heals running->initial (U4) from the
 last committed snapshots and re-runs the epoch. Single-writer + atomic
 manifest commit = the race-free version of the reference's heartbeat healing.
 """
 
 from __future__ import annotations
 
-import time
+import re
+import shutil
 from dataclasses import dataclass
 
 from pyspark import InheritableThread
@@ -106,6 +111,15 @@ _BIG_EPOCH_ROWS = 25_000
 # each re-reading it from the container disk. One threshold for both:
 # stripping is what keeps a DISK_ONLY batch light.
 _GIANT_EPOCH_ROWS = 1_000_000
+# The most data dirs a frontier bucket holds after an epoch's merge. The
+# merge appends new rows to every bucket it does not rewrite, so a bucket
+# no claim reaches would gain a dir per epoch until GC, and every claim
+# read, frontier scan and manifest load walks each dir: measured with
+# tools/bench_frontier_dirs.py (128 buckets, default GC, 4 cores), buckets
+# reached 10 dirs by epoch 20 and epochs 11-20 scanned the frontier 1.9x
+# slower than with one dir per bucket. The merge therefore also rewrites
+# every bucket already at the bound (step 4).
+_FRONTIER_MAX_DIRS = 2
 
 
 @dataclass
@@ -259,10 +273,39 @@ class CrawlJob:
             )
         return f.count()
 
+    def _rollback_appends(self) -> None:
+        """Undo the appends of an epoch the kill cut short: each per-epoch
+        append table goes back to its last version before the first one
+        tagged ``epoch-J`` with J > K, K the frontier's last COMPLETED
+        epoch (an exact ``epoch-K`` tag; ``epoch-K-claim`` is only a
+        claim). Those tables have no per-item key, so a re-crawl would
+        otherwise add a second row per page. Manifest reads only; no
+        Spark job."""
+        def epoch_of(v: dict) -> int | None:
+            m = re.fullmatch(r"epoch-(\d+)", v.get("tag") or "")
+            return int(m.group(1)) if m else None
+
+        done = [e for e in map(epoch_of, self.frontier_t.snapshots()) if e is not None]
+        k = max(done, default=0)
+        tables = (
+            self.pages_t, self.metrics_t, self.debug_t, self.contam_t,
+            self.neardup_pairs_t, self.hostgraph_t, self.hostrank_t,
+            self.neardup.table if self.neardup is not None else None,
+        )
+        for t in tables:
+            vs = t.snapshots() if t is not None else []
+            first = next((i for i, v in enumerate(vs) if (epoch_of(v) or 0) > k), None)
+            if first == 0:  # the table began in an aborted epoch
+                shutil.rmtree(t.dir, ignore_errors=True)
+            elif first is not None:
+                t.rollback(vs[first - 1]["version"])
+
     def resume(self) -> int:
-        """Heal after a kill: running -> initial (U4 resetRunningItems) on
-        the buckets that contain running rows, and continue from the last
-        committed epoch tag."""
+        """Heal after a kill: roll back the append tables of an aborted
+        epoch, running -> initial (U4 resetRunningItems) on the buckets
+        that contain running rows, and continue from the last committed
+        epoch tag (claim tags included)."""
+        self._rollback_appends()
         f = self.frontier_t.read(self.spark)
         dirty = self.frontier_t.bucket_ids_of(f.filter(F.col("status") == Status.RUNNING))
         if dirty:
@@ -377,8 +420,9 @@ class CrawlJob:
         """(frontier_snapshot, claim_source) for this epoch.
 
         nb == 1 (sandbox layout): both are ONE cached read of the snapshot —
-        it feeds the claim, the outlink anti-join, and the merge, so the
-        parquet scan happens once per epoch, not 3x.
+        it feeds the claim, the claim snapshot, the outlink anti-join and
+        the merge (its one bucket is the whole claim side), so the parquet
+        scan happens once per epoch, not 3-4x.
 
         nb > 1 (the 10^10 layout): the frontier is NEVER cached (it doesn't
         fit anywhere at the design point) and the claim source is restricted
@@ -397,20 +441,13 @@ class CrawlJob:
         cand = sorted(b for b, n in counts.items() if n > 0)
         return frontier, self.frontier_t.read_buckets(self.spark, cand, FRONTIER_SCHEMA)
 
-    def claim_only(self, budget: int | None = None) -> tuple[float, int]:
-        """Run and fully materialize JUST the claim stage through the real
-        code path (``_claim_frame`` + ``claim_batch``), returning
-        (wall_sec, n_claimed). Instrumentation for tools/bench_obatch.py —
-        measuring a re-implementation would drift (round-2 lesson)."""
-        t0 = time.time()
-        frontier, claim_src = self._claim_frame()
-        claimed = claim_batch(
-            claim_src, self.cfg, budget=budget,
-            local_topk=self.frontier_t.n_buckets > 1 and self.cfg.dedup,
-        )
-        n = claimed.count()
-        frontier.unpersist()
-        return time.time() - t0, n
+    def _frontier_buckets(self, frontier: DataFrame, buckets: list[int]) -> DataFrame:
+        """The frontier rows of ``buckets``: the cached epoch snapshot itself
+        in the single-bucket layout (its one bucket is the whole table; no
+        second scan), a bucket-pruned read in the bucketed one."""
+        if self.frontier_t.n_buckets == 1:
+            return frontier
+        return self.frontier_t.read_buckets(self.spark, buckets, FRONTIER_SCHEMA)
 
     # -- one epoch ----------------------------------------------------------
     def _apply_link_priorities(
@@ -488,20 +525,17 @@ class CrawlJob:
             stats.finished = not self.cfg.longliving
             return stats
         claimed = claimed.cache()
-        dirty_claim: list[int] | None = None
+        # the claim-side (dirty) buckets: trivially {0} in the single-bucket
+        # layout; in the bucketed one the claim snapshot collects them, or
+        # else the stats Observation below carries them
+        dirty: list[int] | None = [0] if nb == 1 else None
         if self.claim_snapshot:
-            # single-bucket layout: the dirty set is trivially {0} and the
-            # dirty read IS the cached frontier — no collect job, no extra
-            # scan
-            if nb == 1:
-                dirty_claim, fdirty = [0], frontier
-            else:
-                dirty_claim = self.frontier_t.bucket_ids_of(claimed)
-                fdirty = self.frontier_t.read_buckets(
-                    self.spark, dirty_claim, FRONTIER_SCHEMA
-                )
+            if dirty is None:
+                dirty = self.frontier_t.bucket_ids_of(claimed)
             self.frontier_t.merge_buckets(
-                mark_running(fdirty, claimed), dirty_claim, tag=f"epoch-{epoch}-claim"
+                mark_running(self._frontier_buckets(frontier, dirty), claimed),
+                dirty,
+                tag=f"epoch-{epoch}-claim",
             )
 
         # carry mode (the common politeness-bounded epoch): raw html rides
@@ -589,7 +623,7 @@ class CrawlJob:
         # asynchronously after the action returns, so the .get blocks for
         # free wall time if called back-to-back with the write — the stats
         # are pulled at epoch end (or just-in-time below where the bucketed
-        # layout needs claim_bkts for the dirty set) while other jobs run
+        # layout needs the dirty set) while other jobs run
 
         # failed-item debug artifacts (store_browser_debug,
         # crawl_queue.ts:173-180 + handler.ts:178-180): the reference pushes
@@ -718,12 +752,11 @@ class CrawlJob:
         # frontier snapshot) is pre-merge state — the merge only changes
         # statuses, never the url_hash set.
         # Everything between the pages-thread start and its join runs under
-        # try/finally: if the growth agg or merge raises, the orphaned
+        # try/finally: if the admission or merge raises, the orphaned
         # daemon thread could otherwise still commit the pages append in the
         # background, and a caller that catches + retries the epoch would
         # double-append this epoch's rows.
         outlinks = light.select(F.explode("outlinks").alias("item"))
-        scratch: list = []
         tagged: DataFrame | None = None
         try:
             candidates = frontier_rows(outlinks, self.cfg.priority, epoch=epoch)
@@ -754,70 +787,47 @@ class CrawlJob:
                 # scale the plain anti-join beats bloom cogroup round-trips
                 grow_src = candidates.join(
                     frontier.select("url_hash"), "url_hash", "left_anti"
-                ).cache()
+                )
             else:
-                grow_src = candidates.cache()  # reference semantics: dups permitted
-            # (unpersist must target the plan the cache was registered
-            # under, not the CollectMetrics wrapper added below)
-            scratch.append(grow_src)
+                grow_src = candidates  # reference semantics: dups permitted
             is_row = ~F.col(SHARD) if tagged is not None else F.lit(True)
-            # growth count, the new rows' frontier buckets (bucketed layout)
-            # and the seen buckets that emitted a folded shard (collect_sets
-            # over <= n_buckets ints — VERDICT r2 item 1b)
+            # the growth count and the seen buckets that emitted a folded
+            # shard ride an Observation on the merge write itself — no
+            # pre-write job. The observe sits below the admitted-rows
+            # filter, so it also sees the shard rows.
             growth = [F.count(F.when(is_row, 1)).alias("n")]
-            if nb > 1:
-                growth.append(F.collect_set(
-                    F.when(is_row, F.pmod(F.col("host_hash"), F.lit(nb)).cast("int"))
-                ).alias("bkts"))
             if tagged is not None:
                 growth.append(
                     F.collect_set(F.when(F.col(SHARD), F.col("bucket_id"))).alias("seen_bkts")
                 )
-            grow_obs = None
-            if nb == 1:
-                # single-bucket layout (a frontier below ~1M rows): the dirty
-                # set is trivially {0}, so the growth values ride an
-                # Observation on the merge write itself — NO pre-write job
-                # runs at all. The observe sits below the admitted-rows
-                # filter, so it also sees the shard rows.
-                grow_obs = Observation(f"epoch-{epoch}-growth")
-                grow_src = grow_src.observe(grow_obs, *growth)
-                new_bkts = [0]
-            else:
-                # bucketed layout (the 10^10 path): the dirty-bucket set must
-                # be known BEFORE the merge to scope its reads, so one tiny
-                # job over the cached frame returns all three values
-                grow = grow_src.agg(*growth).collect()[0].asDict()
-                stats.new_urls = int(grow["n"])
-                new_bkts = [int(b) for b in (grow["bkts"] or [])]
+            grow_obs = Observation(f"epoch-{epoch}-growth")
+            grow_src = grow_src.observe(grow_obs, *growth)
             new_rows = admitted_rows(grow_src) if tagged is not None else grow_src
 
             # 4. status write-back + retryable-failed re-enqueue + new-row
-            # admission, all in ONE dirty-bucket merge: buckets holding
-            # claimed rows get results merged in, buckets receiving new rows
-            # get them appended, every other bucket is carried over by
-            # reference. The dirty sets piggybacked on the stats/growth
-            # aggregates above, so no extra driver job runs here.
-            # claim-side dirty buckets: the snapshot already collected them;
-            # otherwise (bucketed layout, no claim snapshot) pull them from
-            # the stats Observation just-in-time
-            claim_bkts = (
-                dirty_claim
-                if dirty_claim is not None
-                else ([0] if nb == 1 else [int(b) for b in (obs.get["bkts"] or [])])
+            # admission, all in ONE merge: the buckets holding claimed rows
+            # are rewritten with the results merged in, new rows landing in
+            # any other bucket are appended to it, every other bucket is
+            # carried over by reference. Without a claim snapshot the
+            # bucketed layout pulls the claim side from the stats
+            # Observation just-in-time. The buckets already holding
+            # _FRONTIER_MAX_DIRS dirs are rewritten as they are (the
+            # manifest names them: no extra job), so no append grows a
+            # bucket past the bound.
+            if dirty is None:
+                dirty = [int(b) for b in (obs.get["bkts"] or [])]
+            fold = sorted(
+                set(self.frontier_t.buckets_over(_FRONTIER_MAX_DIRS - 1)) - set(dirty)
             )
-            dirty = sorted(set(claim_bkts) | set(new_bkts))
-            fdirty = (
-                frontier  # cached epoch snapshot IS the single dirty bucket
-                if nb == 1
-                else self.frontier_t.read_buckets(self.spark, dirty, FRONTIER_SCHEMA)
+            merged = reenqueue_failed(
+                merge_results(self._frontier_buckets(frontier, dirty), light),
+                self.cfg.retry_failed_items,
             )
-            merged_dirty = reenqueue_failed(
-                merge_results(fdirty, light), self.cfg.retry_failed_items
-            )
+            if fold:
+                merged = merged.unionByName(self._frontier_buckets(frontier, fold))
             self.frontier_t.merge_buckets(
-                merged_dirty.unionByName(new_rows.select(*FRONTIER_COLS)),
-                dirty,
+                merged.unionByName(new_rows.select(*FRONTIER_COLS)),
+                dirty + fold,
                 tag=f"epoch-{epoch}",
             )
         finally:
@@ -832,9 +842,8 @@ class CrawlJob:
         stats.failed = int(agg["failed"] or 0)
         stats.blocked = int(agg["blocked"] or 0)
         stats.bytes_fetched = int(agg["bytes"] or 0)
-        if grow_obs is not None:
-            grow = grow_obs.get
-            stats.new_urls = int(grow["n"] or 0)
+        grow = grow_obs.get
+        stats.new_urls = int(grow["n"] or 0)
         # the folded shards commit AFTER the frontier (resume() rebuilds the
         # seen set, covering a kill between the two commits); an epoch that
         # admits nothing emits no shard and skips the commit
@@ -863,8 +872,8 @@ class CrawlJob:
         claimed.unpersist()
         light.unpersist()
         results.unpersist()
-        for df in scratch:
-            df.unpersist()
+        if tagged is not None:
+            tagged.unpersist()
 
         # 7b. snapshot GC (Iceberg expire_snapshots) every K epochs: without
         # it a longliving crawl grows one manifest version + dir-set per

@@ -56,7 +56,7 @@ def run_seed_ingest(
     loop uses — robots filter, then, when the seen table exists, the
     one-pass seen admission (operators/seen.filter_unseen: one cached
     tagged frame of admitted rows + folded seen shards). The admitted rows
-    land as a *bucket append* (catalog.BucketedTable.append_buckets), so
+    land as a *bucket append* (catalog.BucketedTable.append), so
     per-batch write volume is O(batch), never O(frontier); the shards then
     commit over their seen buckets, so an epoch interleaved with the stream
     finds the streamed URLs in the seen set and the dedup stays EXACT.
@@ -78,7 +78,7 @@ def run_seed_ingest(
                 F.collect_set(F.when(F.col(SHARD), F.col("bucket_id"))).alias("seen_bkts"),
             ).collect()[0]
             if grow["n"]:
-                job.frontier_t.append_buckets(
+                job.frontier_t.append(
                     admitted_rows(tagged).select(*FRONTIER_COLS), tag=tag
                 )
                 job.seen_t.merge_buckets(
@@ -90,7 +90,7 @@ def run_seed_ingest(
         rows = rows.join(current.select("url_hash"), "url_hash", "left_anti")
         rows = rows.select(*FRONTIER_COLS).cache()
         if rows.count():
-            job.frontier_t.append_buckets(rows, tag=tag)
+            job.frontier_t.append(rows, tag=tag)
         rows.unpersist()
 
     q = (

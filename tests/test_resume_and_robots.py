@@ -1,13 +1,17 @@
 """Checkpoint/resume (replaces the reference's queue-healing U4/U7/U8) and
 robots.txt filtering (north_rule addition)."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from crawling_infrastructure_spark.catalog import BucketedTable, Catalog
 from crawling_infrastructure_spark.config import TaskConfig
 from crawling_infrastructure_spark.operators.claim import claim_batch, mark_running
 from crawling_infrastructure_spark.operators.frontier import frontier_rows
 from crawling_infrastructure_spark.operators.robots import RobotsCache, filter_allowed
+from crawling_infrastructure_spark.plans import epoch as epoch_mod
 from crawling_infrastructure_spark.plans.epoch import CrawlJob
 from crawling_infrastructure_spark.schema import Status
 from crawling_infrastructure_spark.sources.seeds import seeds_from_list
@@ -55,6 +59,98 @@ def test_expire_snapshots_keeps_current(spark, corpus, tmp_path):
     job.frontier_t.expire_snapshots(keep_last=2)
     assert len(job.frontier_t.snapshots()) <= 3
     assert job.frontier_t.read(spark).count() > 0  # current still readable
+
+
+@pytest.mark.parametrize("kill_epoch", [1, 2])
+def test_kill_in_epoch_merge_resumes_without_duplicate_pages(
+    spark, corpus, tmp_path, monkeypatch, kill_epoch
+):
+    """A kill inside an epoch's frontier merge lands after the metrics and
+    pages appends have committed; resume() must roll those back (epoch 1:
+    drop the tables it created), or the re-crawl writes a second row per
+    page."""
+    # epoch-independent outcomes: the resumed run's epoch numbers are
+    # shifted by the aborted epoch, and must not change what gets crawled
+    outcome = lambda url, epoch: fetch_outcome(url, 0)  # noqa: E731
+    cfg = TaskConfig(task_id="kill", max_items_per_second=2, epoch_seconds=10)
+    seeds = seeds_from_list(spark, seed_urls(N_HOSTS))
+    ref = CrawlJob(spark, str(tmp_path / "ref"), corpus, cfg, outcome_fn=outcome)
+    ref_hist = ref.run(seeds=seeds, max_epochs=kill_epoch + 2)
+
+    job = CrawlJob(spark, str(tmp_path / "kill"), corpus, cfg, outcome_fn=outcome)
+    job.init_task(seeds)
+    for epoch in range(1, kill_epoch):
+        job.run_epoch(epoch)
+    merge = BucketedTable.merge_buckets
+
+    def killed(self, df, dirty, tag=None):
+        if tag == f"epoch-{kill_epoch}":
+            raise RuntimeError("killed inside the epoch merge")
+        return merge(self, df, dirty, tag)
+
+    monkeypatch.setattr(BucketedTable, "merge_buckets", killed)
+    with pytest.raises(RuntimeError, match="killed"):
+        job.run_epoch(kill_epoch)
+    monkeypatch.undo()
+
+    job2 = CrawlJob(spark, str(tmp_path / "kill"), corpus, cfg, outcome_fn=outcome)
+    hist = job2.run(max_epochs=3)
+    assert hist[0].epoch == kill_epoch + 1
+    assert len(hist) == len(ref_hist) - (kill_epoch - 1)
+    pages = job2.pages_t.read(spark).select("url").collect()
+    assert len(pages) == len({r["url"] for r in pages})
+    assert {r["url"] for r in pages} == {
+        r["url"] for r in ref.pages_t.read(spark).select("url").collect()
+    }
+    assert job2.metrics_t.read(spark).filter(F.col("epoch") == kill_epoch).count() == 0
+
+
+def test_flat_expire_snapshots_removes_uncommitted_dir(spark, tmp_path):
+    t = Catalog(str(tmp_path)).table("pages")
+    for i in range(3):
+        t.append(spark.range(i, i + 1).toDF("id"), tag=f"epoch-{i}")
+    # a write that died before its manifest commit
+    orphan = os.path.join(t.dir, "v_00000099_deadbeef")
+    spark.range(5).write.parquet(orphan)
+    t.expire_snapshots(keep_last=1)
+    assert not os.path.exists(orphan)
+    assert sorted(r["id"] for r in t.read(spark).collect()) == [0, 1, 2]
+
+
+def test_frontier_dirs_stay_bounded_and_resume_with_keep_one(
+    spark, corpus, tmp_path, monkeypatch
+):
+    """New rows append a dir to each unclaimed frontier bucket they land in;
+    the epoch merge also rewrites every bucket already at _FRONTIER_MAX_DIRS,
+    so no bucket ever holds more. Under snapshot_keep=1 the merge that folds
+    them is the only frontier version left and must still name the epoch."""
+    cfg = TaskConfig(
+        task_id="gc1", max_items_per_second=1, epoch_seconds=2, frontier_buckets=8,
+        snapshot_gc_epochs=1, snapshot_keep=1,
+    )
+    root = str(tmp_path)
+    job = CrawlJob(spark, root, corpus, cfg, outcome_fn=fetch_outcome)
+    job.init_task(seeds_from_list(spark, seed_urls(N_HOSTS)))
+    over = BucketedTable.buckets_over
+    folded: list[int] = []
+
+    def spy(self, max_dirs):
+        out = over(self, max_dirs)
+        if self is job.frontier_t:
+            folded.extend(out)
+        return out
+
+    monkeypatch.setattr(BucketedTable, "buckets_over", spy)
+    for epoch in range(1, 9):
+        job.run_epoch(epoch)
+        dirs = [len(d) for d in job.frontier_t._current_buckets().values()]
+        assert max(dirs) <= epoch_mod._FRONTIER_MAX_DIRS
+        if folded:
+            break
+    assert folded, "no frontier bucket reached the dir bound"
+    assert [v["tag"] for v in job.frontier_t.snapshots()] == [f"epoch-{epoch}"]
+    reopened = CrawlJob(spark, root, corpus, cfg, outcome_fn=fetch_outcome)
+    assert reopened.resume() == epoch
 
 
 def test_robots_longest_match():

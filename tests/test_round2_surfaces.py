@@ -268,7 +268,9 @@ def test_assign_regions_broadcast_join(spark):
 
 def test_merge_buckets_rewrites_only_dirty(spark, tmp_path):
     cat = Catalog(str(tmp_path / "cat"))
-    t = cat.bucketed_table("f", n_buckets=8, key="host_hash")
+    t = cat.bucketed_table(
+        "f", n_buckets=8, key="host_hash", stat_filter=f"status = {Status.INITIAL}"
+    )
     rows = frontier_rows(
         spark.createDataFrame([(f"https://h{i}.example/p",) for i in range(40)], ["item"]),
         1,
@@ -296,6 +298,37 @@ def test_merge_buckets_rewrites_only_dirty(spark, tmp_path):
     ) - t.read_buckets(spark, [int(b) for b in untouched]).count()
     assert t.read(spark).count() == 40 - n_dirty_before + 1
 
+    # rows outside ``dirty`` ride the same merge as appends: their buckets
+    # keep every prior dir and gain exactly one; the dirty bucket is still
+    # replaced, every other bucket carried over
+    extra = frontier_rows(
+        spark.createDataFrame([(f"https://x{i}.example/q",) for i in range(40)], ["item"]),
+        1,
+        1,
+    )
+    n_before = t.read(spark).count()
+    t.merge_buckets(delta.unionByName(extra), dirty, tag="v3")
+    after3 = t._current_buckets()
+    dirty_keys = {str(b) for b in dirty}
+    grown = {str(b) for b in t.bucket_ids_of(extra)} - dirty_keys
+    assert grown
+    for b in grown:
+        prior = after.get(b, [])
+        assert after3[b][: len(prior)] == prior and len(after3[b]) == len(prior) + 1
+    assert all(after3[b] == after[b] for b in set(after) - grown - dirty_keys)
+    assert all(len(after3[b]) == 1 for b in dirty_keys)
+    assert t.read(spark).count() == n_before + 40
+    # the manifest's per-bucket initial counts match a recount
+    recount = {
+        int(r["b"]): int(r["count"])
+        for r in t.read(spark)
+        .filter(F.col("status") == Status.INITIAL)
+        .groupBy(F.pmod(F.col("host_hash"), F.lit(8)).cast("int").alias("b"))
+        .count()
+        .collect()
+    }
+    assert {b: n for b, n in t.stat_counts().items() if n} == recount
+
 
 def test_append_buckets_is_o_batch(spark, tmp_path):
     cat = Catalog(str(tmp_path / "cat2"))
@@ -307,7 +340,7 @@ def test_append_buckets_is_o_batch(spark, tmp_path):
     )
     t.write_full(mk(0, 32), tag="v1")
     before = t._current_buckets()
-    t.append_buckets(mk(32, 36), tag="v2")
+    t.append(mk(32, 36), tag="v2")
     after = t._current_buckets()
     assert t.read(spark).count() == 36
     # appended dirs only on buckets that received rows; their old dirs remain

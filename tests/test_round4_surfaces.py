@@ -121,7 +121,7 @@ def test_bucketed_stat_counts_maintained(spark, tmp_path):
         priority=1,
         epoch=1,
     )
-    t.append_buckets(extra, tag="grow")
+    t.append(extra, tag="grow")
     got3 = t.stat_counts()
     grown = _actual_initial_counts(t.read(spark), nb)
     assert {b: n for b, n in got3.items() if n} == grown
@@ -157,9 +157,7 @@ def test_claim_only_matches_budget(spark, corpus, tmp_path):
     )
     job = CrawlJob(spark, str(tmp_path / "cat"), corpus, cfg, outcome_fn=fetch_outcome)
     job.init_task(seeds_from_list(spark, seed_urls(20)))
-    wall, n = job.claim_only()
-    assert n == cfg.epoch_budget
-    assert wall > 0
+    assert job.run_epoch(1).claimed == cfg.epoch_budget
 
 
 # -- 2. compaction bounds append-table dirs ----------------------------------
@@ -193,7 +191,7 @@ def test_bucketed_compact_small(spark, tmp_path):
     cat = Catalog(str(tmp_path))
     t = cat.bucketed_table("seenish", nb, key="k", stat_filter=None)
     for i in range(6):
-        t.append_buckets(
+        t.append(
             spark.range(i * 20, i * 20 + 20).select(F.col("id").alias("k")),
             tag=f"b{i}",
         )
