@@ -6,18 +6,19 @@ resume). The sandbox has no Iceberg runtime jar, so this module provides the
 same contract over plain Parquet with an atomic-rename manifest:
 
     <root>/<table>/
-        v_00000001_<uuid>/   data dirs (parquet)
-        _manifest.json       {"current": N, "versions": [...]}
+        v_00000001_<uuid>/   data dirs (parquet; one _bkt=<b> subdir per
+                             bucket when the table has more than one)
+        _manifest.json       {"current": N, "n_buckets": B, "versions": [...]}
 
-- a *version* is a list of data dirs (``Table``) or a map bucket -> data
-  dirs (``BucketedTable``); each class has ONE write primitive that writes
-  one new data dir and commits a version naming it next to carried-over
-  dirs. ``Table._write_dirs(df, keep)`` carries the dirs in ``keep``:
-  ``append`` keeps every current dir (O(delta), like an Iceberg append
-  snapshot), ``write_full`` none (an overwrite snapshot), ``compact_small``
-  all but the ones it rewrites. ``BucketedTable._write_buckets(df, dirty)``
-  REPLACES the buckets in ``dirty`` and appends to the rest (two names,
-  since the two lists mean opposite things)
+- ONE table class: a version maps ``bucket_id -> [data dirs]``, and a flat
+  table is a table with one bucket. ONE write primitive,
+  ``Table._write(df, drop, tag)``, writes ``df`` as one new data dir (a
+  subdir per bucket that got rows) and commits the current dirs minus
+  ``drop`` plus the new ones; a bucket left with no dirs disappears. The
+  public writes name what they drop: ``append`` nothing (O(delta), like an
+  Iceberg append snapshot), ``write_full`` every dir (an overwrite
+  snapshot), ``merge_buckets`` the dirty buckets' dirs (MERGE INTO),
+  ``compact_small`` the small dirs it rewrites
 - commit = write manifest to a temp file + ``os.replace`` (atomic on POSIX);
   the epoch driver is the single writer, so this is race-free by
   construction — exactly the property the reference lacked and papered over
@@ -65,10 +66,51 @@ def suggest_buckets(
 
 
 class Table:
-    def __init__(self, root: str, name: str):
+    """Iceberg-style ``PARTITIONED BY bucket(n_buckets, key)`` table over
+    Parquet; ``n_buckets=1`` (the default, no key) is a flat table whose
+    one bucket is plain parquet, written with no repartition.
+
+    Every write goes through ``_write(df, drop)`` (see the module
+    docstring): rows land in their bucket as one new dir, the dirs in
+    ``drop`` leave the version, every other dir carries over by reference.
+    A write that touches K of N buckets therefore costs O(touched buckets),
+    never O(table) — the property that makes the epoch loop's frontier
+    write-back O(batch) at a 10^10-row frontier (VERDICT round-1 item 1;
+    reference per-item update semantics: crawler/src/crawl_queue.ts:119-149).
+
+    Bucket id = ``pmod(key, n_buckets)`` — non-negative even for signed
+    xxhash64 keys; for tables already keyed by a bucket ordinal in
+    [0, n_buckets) (the seen table) pmod is the identity.
+    """
+
+    BKT = "_bkt"
+
+    def __init__(
+        self,
+        root: str,
+        name: str,
+        n_buckets: int = 1,
+        key: str | None = None,
+        stat_filter: str | None = None,
+    ):
         self.dir = os.path.join(root, name)
         self.name = name
         self._manifest_path = os.path.join(self.dir, "_manifest.json")
+        self.key = key
+        # ``stat_filter`` (a SQL predicate, e.g. "status = 0") turns on
+        # per-dir matching-row counts in the manifest — the Iceberg-manifest-
+        # statistics analogue that lets readers prune buckets with zero
+        # matching rows WITHOUT any scan (the claim stage's bucket index,
+        # VERDICT r3 #2-next). Maintained at commit time from the just-
+        # written dirs; carried-over dirs keep their counts. Only active in
+        # the bucketed layout (n_buckets > 1) — the single-bucket layout of
+        # small frontiers never pays the extra count job.
+        self.stat_filter = stat_filter
+        # the bucket count is part of the table's physical layout: a table
+        # that already has data dictates it (persisted at first commit), so
+        # resume/reopen always agrees with what's on disk regardless of the
+        # constructor argument (which then only seeds NEW tables)
+        self.n_buckets = int(self._load().get("n_buckets", n_buckets))
 
     # -- manifest ---------------------------------------------------------
     def _load(self) -> dict:
@@ -91,12 +133,6 @@ class Table:
         would shadow the new snapshot."""
         return max((v["version"] for v in m["versions"]), default=0) + 1
 
-    def _commit_version(self, m: dict, version: int, entry: dict) -> int:
-        m["versions"].append({"version": version, **entry})
-        m["current"] = version
-        self._commit(m)
-        return version
-
     def exists(self) -> bool:
         return bool(self._load()["versions"])
 
@@ -106,192 +142,30 @@ class Table:
     def snapshots(self) -> list[dict]:
         return self._load()["versions"]
 
-    def _version_dirs(self, v: dict) -> list[str]:
+    @staticmethod
+    def _version_dirs(v: dict) -> list[str]:
         """Every data dir version ``v`` references."""
-        return v["dirs"]
+        return [d for dirs in v["buckets"].values() for d in dirs]
 
     def _current(self, m: dict) -> dict | None:
         return next((v for v in m["versions"] if v["version"] == m["current"]), None)
 
-    def _current_dirs(self, manifest: dict | None = None) -> list[str]:
+    def _current_buckets(self, manifest: dict | None = None) -> dict[str, list[str]]:
         v = self._current(manifest or self._load())
-        return self._version_dirs(v) if v else []
+        return v["buckets"] if v else {}
+
+    def _current_dirs(self) -> list[str]:
+        return [d for dirs in self._current_buckets().values() for d in dirs]
 
     # -- data -------------------------------------------------------------
-    def _new_data_dir(self, version: int) -> str:
-        return os.path.join(self.dir, f"v_{version:08d}_{uuid.uuid4().hex[:8]}")
-
-    def _write_dirs(self, df: DataFrame, keep: list[str], tag: str | None) -> int:
-        """The one write primitive: write ``df`` as one new data dir and
-        commit a version referencing ``keep`` + that dir."""
-        m = self._load()
-        version = self._next_version(m)
-        d = self._new_data_dir(version)
-        df.write.mode("overwrite").parquet(d)
-        return self._commit_version(m, version, {"dirs": keep + [d], "tag": tag})
-
-    def write_full(self, df: DataFrame, tag: str | None = None) -> int:
-        """Overwrite snapshot (the Parquet stand-in for Iceberg MERGE INTO /
-        overwritePartitions). New version references only the new dir."""
-        return self._write_dirs(df, [], tag)
-
-    def append(self, df: DataFrame, tag: str | None = None) -> int:
-        """Append snapshot: O(new data) — no rewrite of existing dirs."""
-        return self._write_dirs(df, self._current_dirs(), tag)
-
-    def read(self, spark: SparkSession, schema: T.StructType | None = None) -> DataFrame:
-        """``schema``: skip parquet footer inference — at one frontier read
-        per epoch the driver-side footer fetch is measurable fixed cost."""
-        dirs = self._current_dirs()
-        if not dirs:
-            raise FileNotFoundError(f"table {self.name} has no data")
-        reader = spark.read.schema(schema) if schema is not None else spark.read
-        return reader.parquet(*dirs)
-
-    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
-        for v in self._load()["versions"]:
-            if v["version"] == version:
-                return spark.read.parquet(*self._version_dirs(v))
-        raise KeyError(f"{self.name}: no version {version}")
-
-    def rollback(self, version: int) -> None:
-        """Make an older snapshot current (Iceberg rollback_to_snapshot) —
-        the resume path after a killed job."""
-        m = self._load()
-        if version not in [v["version"] for v in m["versions"]]:
-            raise KeyError(f"{self.name}: no version {version}")
-        m["current"] = version
-        self._commit(m)
-
-    def expire_snapshots(self, keep_last: int = 5) -> None:
-        """GC old versions' unreferenced dirs (Iceberg expire_snapshots)."""
-        m = self._load()
-        if len(m["versions"]) <= keep_last:
-            return
-        keep = m["versions"][-keep_last:]
-        if m["current"] not in [v["version"] for v in keep]:
-            keep = [v for v in m["versions"] if v["version"] == m["current"]] + keep
-        referenced = {d for v in keep for d in self._version_dirs(v)}
-        # a data root no kept version references into is garbage: a dir only
-        # expired versions named, a write that died before its commit, or
-        # (bucketed) the empty shell of a root whose bucket subdirs
-        # (<root>/v_x/_bkt=3) were all superseded
-        for entry in os.listdir(self.dir):
-            root = os.path.join(self.dir, entry)
-            if entry.startswith("v_") and not any(
-                d == root or d.startswith(root + os.sep) for d in referenced
-            ):
-                shutil.rmtree(root, ignore_errors=True)
-        for d in {d for v in m["versions"] for d in self._version_dirs(v)} - referenced:
-            shutil.rmtree(d, ignore_errors=True)
-        m["versions"] = keep
-        self._commit(m)
-
-    def _dir_bytes(self, d: str) -> int:
-        return sum(
-            os.path.getsize(os.path.join(r, f))
-            for r, _, files in os.walk(d)
-            for f in files
-        )
-
-    def compact_small(
-        self, spark: SparkSession, max_dirs: int = 8, tag: str | None = "compact"
-    ) -> int | None:
-        """Size-tiered compaction for append-mode tables (the Iceberg
-        rewrite_data_files maintenance action): when the current version
-        references more than ``max_dirs`` data dirs, rewrite the SMALLEST
-        surplus dirs into one and commit a new version. Old versions keep
-        referencing the pre-compaction dirs until expire_snapshots retires
-        them, so rollback/resume still works across a compaction.
-
-        Merging smallest-first is the LSM size-tiering rule: per-epoch
-        appends (small) get folded together repeatedly before ever touching
-        the big consolidated runs, so total write amplification is
-        O(log n_appends) per row — a longliving crawl's pages/metrics tables
-        stay at <= max_dirs dirs without rewriting the full table each GC.
-        Without this, append() grows one dir per epoch FOREVER and every
-        read lists O(epochs) dirs (VERDICT r3 what's-wrong #3)."""
-        dirs = self._current_dirs()
-        if len(dirs) <= max_dirs:
-            return None
-        by_size = sorted(dirs, key=self._dir_bytes)
-        merge = set(by_size[: len(dirs) - max_dirs + 1])
-        kept = [x for x in dirs if x not in merge]  # original relative order
-        return self._write_dirs(spark.read.parquet(*sorted(merge)), kept, tag)
-
-
-class BucketedTable(Table):
-    """Iceberg-style ``PARTITIONED BY bucket(N, key)`` table over Parquet.
-
-    A version's data is a map ``bucket_id -> [data dirs]`` instead of a flat
-    dir list. Every write goes through ONE primitive,
-    ``_write_buckets(df, dirty)``: df is written partitioned by bucket; a
-    bucket in ``dirty`` is REPLACED by its rows (and dropped if it got
-    none), any other bucket receiving rows gains them as one new dir, and
-    every untouched bucket is carried over by reference. A write that
-    touches K of N buckets therefore costs O(touched buckets), never
-    O(table) — the property that makes the epoch loop's frontier write-back
-    O(batch) at a 10^10-row frontier (VERDICT round-1 item 1; reference
-    per-item update semantics: crawler/src/crawl_queue.ts:119-149). The
-    public writes name its uses:
-
-    - ``merge_buckets(df, dirty)``: MERGE INTO — df holds the new full
-      content of the dirty buckets plus any rows to append elsewhere.
-    - ``append(df)``: nothing dirty (streaming admission — per-batch write
-      volume is O(batch), independent of table size).
-    - ``write_full(df)``: every bucket dirty (overwrite snapshot).
-    - ``compact_small``: the fat buckets dirty, rewritten from their dirs.
-
-    Bucket id = ``pmod(key, n_buckets)`` — non-negative even for signed
-    xxhash64 keys; for tables already keyed by a bucket ordinal in
-    [0, n_buckets) (the seen table) pmod is the identity.
-    """
-
-    BKT = "_bkt"
-
-    def __init__(
-        self,
-        root: str,
-        name: str,
-        n_buckets: int,
-        key: str,
-        stat_filter: str | None = None,
-    ):
-        super().__init__(root, name)
-        self.n_buckets = n_buckets
-        self.key = key
-        # ``stat_filter`` (a SQL predicate, e.g. "status = 0") turns on
-        # per-dir matching-row counts in the manifest — the Iceberg-manifest-
-        # statistics analogue that lets readers prune buckets with zero
-        # matching rows WITHOUT any scan (the claim stage's bucket index,
-        # VERDICT r3 #2-next). Maintained at commit time from the just-
-        # written dirs; carried-over dirs keep their counts. Only active in
-        # the bucketed layout (n_buckets > 1) — the single-bucket sandbox
-        # layout never pays the extra count job.
-        self.stat_filter = stat_filter
-        # the bucket count is part of the table's physical layout: a table
-        # that already has data dictates it (persisted at first commit), so
-        # resume/reopen always agrees with what's on disk regardless of the
-        # constructor argument (which then only seeds NEW tables)
-        m = self._load()
-        if m["versions"] and "n_buckets" in m:
-            self.n_buckets = int(m["n_buckets"])
-
-    def _bucket_col(self):
-        return F.pmod(F.col(self.key), F.lit(self.n_buckets)).cast("int")
+    def _bucket_col(self, key: str | None = None):
+        return F.pmod(F.col(key or self.key), F.lit(self.n_buckets)).cast("int")
 
     def bucket_ids_of(self, df: DataFrame, key: str | None = None) -> list[int]:
         """Distinct bucket ids present in df (the dirty set) — one tiny
         distinct-collect over a single int column."""
-        b = F.pmod(F.col(key or self.key), F.lit(self.n_buckets)).cast("int")
-        return sorted(int(r[0]) for r in df.select(b.alias("b")).distinct().collect())
-
-    def _version_dirs(self, v: dict) -> list[str]:
-        return [d for dirs in v["buckets"].values() for d in dirs]
-
-    def _current_buckets(self, manifest: dict | None = None) -> dict[str, list[str]]:
-        v = self._current(manifest or self._load())
-        return v["buckets"] if v else {}
+        b = self._bucket_col(key).alias("b")
+        return sorted(int(r[0]) for r in df.select(b).distinct().collect())
 
     def _write_partitioned(
         self, df: DataFrame, path: str, n_parts: int | None = None
@@ -305,9 +179,9 @@ class BucketedTable(Table):
         1a). A task may write several buckets; each bucket still lands in
         one file, since the repartition is keyed by bucket."""
         if self.n_buckets == 1:
-            # unbucketed layout (suggest_buckets floor): bucket 0 IS the
-            # table — plain parallel write, no repartition shuffle, no
-            # dynamic-partition committer, upstream parallelism preserved
+            # flat layout: bucket 0 IS the table — plain parallel write, no
+            # repartition shuffle, no dynamic-partition committer, upstream
+            # parallelism preserved
             df.write.mode("overwrite").parquet(path)
             return {"0": path}
         (
@@ -349,38 +223,61 @@ class BucketedTable(Table):
         }
         return {p: counts.get(int(b), 0) for b, p in written.items()}
 
-    def _write_buckets(
+    def _write(
         self,
         df: DataFrame,
-        dirty: Iterable[int | str],
+        drop: Iterable[str],
         tag: str | None,
         n_parts: int | None = None,
     ) -> int:
-        """The one write primitive (see the class docstring): rows in a
-        ``dirty`` bucket replace it, rows in any other bucket append one dir
-        to it, untouched buckets carry over, a dirty bucket without rows is
-        dropped. Stats of carried dirs ride along; written dirs get fresh
-        counts."""
+        """The one write primitive: write ``df`` as one new data dir (one
+        subdir per bucket with rows) and commit a version naming the
+        current dirs minus ``drop`` plus the new subdirs; a bucket left
+        with no dirs is dropped. Stats of carried dirs ride along; written
+        dirs get fresh counts."""
         m = self._load()
         version = self._next_version(m)
-        d = self._new_data_dir(version)
+        d = os.path.join(self.dir, f"v_{version:08d}_{uuid.uuid4().hex[:8]}")
         written = self._write_partitioned(df, d, n_parts)
         new_stats = self._stats_for(df, d, written)
-        cur = self._current(m) or {}
-        dirty = {str(b) for b in dirty}
-        buckets = {
-            b: list(dirs) for b, dirs in cur.get("buckets", {}).items() if b not in dirty
-        }
+        drop = set(drop)
+        buckets: dict[str, list[str]] = {}
+        for b, dirs in self._current_buckets(m).items():
+            kept = [p for p in dirs if p not in drop]
+            if kept:
+                buckets[b] = kept
         for b, p in written.items():
             buckets.setdefault(b, []).append(p)
-        entry: dict = {"buckets": buckets, "tag": tag}
+        entry: dict = {"version": version, "buckets": buckets, "tag": tag}
         if self.stat_filter and self.n_buckets > 1:
+            cur = self._current(m) or {}
             stats = {**(cur.get("dir_stats") or {}), **(new_stats or {})}
             entry["dir_stats"] = {
                 p: stats[p] for dirs in buckets.values() for p in dirs if p in stats
             }
+        m["versions"].append(entry)
+        m["current"] = version
         m["n_buckets"] = self.n_buckets  # layout is immutable once data exists
-        return self._commit_version(m, version, entry)
+        self._commit(m)
+        return version
+
+    def write_full(self, df: DataFrame, tag: str | None = None) -> int:
+        """Overwrite snapshot (the Parquet stand-in for Iceberg MERGE INTO /
+        overwritePartitions): the new version references only df's dirs."""
+        return self._write(df, self._current_dirs(), tag)
+
+    def append(self, df: DataFrame, tag: str | None = None) -> int:
+        """Append snapshot: O(new data), each bucket receiving rows gains
+        one dir, no existing dir is rewritten."""
+        return self._write(df, (), tag)
+
+    def merge_buckets(self, df: DataFrame, dirty: list[int], tag: str | None = None) -> int:
+        """Replace the content of the ``dirty`` buckets with df's rows in
+        them; df's rows in other buckets are appended. Untouched buckets
+        are carried over by reference: O(touched buckets)."""
+        cur = self._current_buckets()
+        drop = [p for b in dirty for p in cur.get(str(b), [])]
+        return self._write(df, drop, tag, n_parts=max(1, len(dirty)))
 
     def stat_counts(self) -> dict[int, int] | None:
         """{bucket_id: rows matching stat_filter} for the CURRENT version,
@@ -399,53 +296,127 @@ class BucketedTable(Table):
             out[int(b)] = sum(ds[d] for d in dirs)
         return out
 
-    def write_full(self, df: DataFrame, tag: str | None = None) -> int:
-        return self._write_buckets(df, range(self.n_buckets), tag)
-
-    def merge_buckets(self, df: DataFrame, dirty: list[int], tag: str | None = None) -> int:
-        """Replace the content of the ``dirty`` buckets with df's rows in
-        them; df's rows in other buckets are appended. Untouched buckets
-        are carried over by reference: O(touched buckets)."""
-        return self._write_buckets(df, dirty, tag, n_parts=max(1, len(dirty)))
-
-    def append(self, df: DataFrame, tag: str | None = None) -> int:
-        """Append df's rows; buckets receiving rows gain one dir each."""
-        return self._write_buckets(df, (), tag)
-
-    def read_buckets(
-        self, spark: SparkSession, bucket_ids: list[int], schema: T.StructType | None = None
+    def _read_dirs(
+        self, spark: SparkSession, dirs: list[str], schema: T.StructType | None
     ) -> DataFrame:
-        """Read only the named buckets (Iceberg bucket-pruned scan). Buckets
-        with no data yet contribute nothing; if none exist, returns an empty
-        DataFrame of ``schema``."""
-        cur = self._current_buckets()
-        dirs = [d for b in bucket_ids for d in cur.get(str(b), [])]
+        """``schema``: skip parquet footer inference — at one frontier read
+        per epoch the driver-side footer fetch is measurable fixed cost —
+        and answer an empty DataFrame of it when ``dirs`` is empty (a
+        table, or bucket, that no row has reached yet)."""
         if dirs:
             reader = spark.read.schema(schema) if schema is not None else spark.read
             return reader.parquet(*dirs)
         if schema is None:
-            raise FileNotFoundError(f"table {self.name}: no data in buckets {bucket_ids}")
+            raise FileNotFoundError(f"table {self.name}: no data")
         return spark.createDataFrame([], schema)
+
+    def read(self, spark: SparkSession, schema: T.StructType | None = None) -> DataFrame:
+        return self._read_dirs(spark, self._current_dirs(), schema)
+
+    def read_buckets(
+        self, spark: SparkSession, bucket_ids: list[int], schema: T.StructType | None = None
+    ) -> DataFrame:
+        """Read only the named buckets (Iceberg bucket-pruned scan)."""
+        cur = self._current_buckets()
+        return self._read_dirs(spark, [d for b in bucket_ids for d in cur.get(str(b), [])], schema)
+
+    def read_version(self, spark: SparkSession, version: int) -> DataFrame:
+        for v in self._load()["versions"]:
+            if v["version"] == version:
+                return spark.read.parquet(*self._version_dirs(v))
+        raise KeyError(f"{self.name}: no version {version}")
+
+    def rollback(self, version: int) -> None:
+        """Make an older snapshot current (Iceberg rollback_to_snapshot) —
+        the resume path after a killed job."""
+        m = self._load()
+        if version not in [v["version"] for v in m["versions"]]:
+            raise KeyError(f"{self.name}: no version {version}")
+        m["current"] = version
+        self._commit(m)
+
+    def expire_snapshots(self, keep_last: int = 5) -> None:
+        """GC old versions' unreferenced dirs (Iceberg expire_snapshots)."""
+        m = self._load()
+        if len(m["versions"]) <= keep_last:
+            return
+        keep = m["versions"][-keep_last:]
+        if m["current"] not in [v["version"] for v in keep]:
+            keep = [v for v in m["versions"] if v["version"] == m["current"]] + keep
+        referenced = {d for v in keep for d in self._version_dirs(v)}
+        # a data root no kept version references into is garbage: a dir only
+        # expired versions named, a write that died before its commit, or
+        # the empty shell of a root whose bucket subdirs (<root>/v_x/_bkt=3)
+        # were all superseded
+        for entry in os.listdir(self.dir):
+            root = os.path.join(self.dir, entry)
+            if entry.startswith("v_") and not any(
+                d == root or d.startswith(root + os.sep) for d in referenced
+            ):
+                shutil.rmtree(root, ignore_errors=True)
+        for d in {d for v in m["versions"] for d in self._version_dirs(v)} - referenced:
+            shutil.rmtree(d, ignore_errors=True)
+        m["versions"] = keep
+        self._commit(m)
+
+    # -- maintenance --------------------------------------------------------
+    @staticmethod
+    def _dir_bytes(d: str) -> int:
+        return sum(
+            os.path.getsize(os.path.join(r, f))
+            for r, _, files in os.walk(d)
+            for f in files
+        )
 
     def buckets_over(self, max_dirs: int) -> list[int]:
         """Buckets whose current dir list holds more than ``max_dirs`` dirs
-        (each append or merge that lands rows outside its dirty set adds one
-        dir to a bucket) — a manifest read, zero Spark jobs."""
+        (each append, or merge that lands rows outside its dirty set, adds
+        one dir to a bucket) — a manifest read, zero Spark jobs."""
         cur = self._current_buckets()
         return sorted(int(b) for b, dirs in cur.items() if len(dirs) > max_dirs)
 
     def compact_small(
         self, spark: SparkSession, max_dirs: int = 8, tag: str | None = "compact"
     ) -> int | None:
-        """Per-bucket compaction: any bucket in ``buckets_over(max_dirs)``
-        is rewritten to a single dir; thin buckets carry over by reference.
-        Cost is O(fat-bucket content), never O(table)."""
-        fat = self.buckets_over(max_dirs)
+        """Size-tiered compaction (the Iceberg rewrite_data_files maintenance
+        action): in each bucket holding more than ``max_dirs`` data dirs,
+        rewrite its SMALLEST surplus dirs as one and commit a new version;
+        the bucket's other dirs carry over by reference. Old versions keep
+        referencing the pre-compaction dirs until expire_snapshots retires
+        them, so rollback/resume still works across a compaction.
+
+        Merging smallest-first is the LSM size-tiering rule: per-epoch
+        appends (small) get folded together repeatedly before ever touching
+        the big consolidated runs, so total write amplification is
+        O(log n_appends) per row — a longliving crawl's append tables stay
+        at <= max_dirs dirs per bucket without rewriting the full table each
+        GC. Without this, append() grows one dir per epoch FOREVER and every
+        read lists O(epochs) dirs (VERDICT r3 what's-wrong #3)."""
+        fat = [d for d in self._current_buckets().values() if len(d) > max_dirs]
         if not fat:
             return None
-        cur = self._current_buckets()
-        df = spark.read.parquet(*[p for b in fat for p in cur[str(b)]])
-        return self._write_buckets(df, fat, tag, n_parts=len(fat))
+        merge = [
+            p for dirs in fat
+            for p in sorted(dirs, key=self._dir_bytes)[: len(dirs) - max_dirs + 1]
+        ]
+        return self._write(spark.read.parquet(*sorted(merge)), merge, tag, n_parts=len(fat))
+
+
+class BucketedTable(Table):
+    """A ``Table`` whose bucket count and key the caller must name (the
+    frontier, the seen set, the near-dup band store). It adds no behaviour:
+    it is its own class so that patching a method on it reaches only the
+    bucketed tables."""
+
+    def __init__(
+        self,
+        root: str,
+        name: str,
+        n_buckets: int,
+        key: str,
+        stat_filter: str | None = None,
+    ):
+        super().__init__(root, name, n_buckets, key, stat_filter)
 
 
 class Catalog:

@@ -31,7 +31,7 @@ buckets) of state; the hash array costs 8 B/key (~80 GB total at 10^10,
 buckets receiving candidates are ever deserialized. Net semantics: EXACT —
 identical to the old frontier anti-join because the seen set is maintained
 in lockstep with frontier admission (built from the full frontier at
-init/bootstrap/resume, folded with every admitted batch).
+init_task/resume, folded with every admitted batch).
 
 Bloom sizing (round-3 stretch item): every fold re-sizes the bucket's
 bloom from the MERGED exact count instead of a fixed 1<<16 floor, so a

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
-from crawling_infrastructure_spark.catalog import Catalog, suggest_buckets
+from crawling_infrastructure_spark.catalog import Catalog, Table, suggest_buckets
 from crawling_infrastructure_spark.config import TaskConfig
 from crawling_infrastructure_spark.operators.claim import claim_batch, mark_running
 from crawling_infrastructure_spark.operators.fetch import (
@@ -175,9 +175,10 @@ class CrawlJob:
         self.claim_snapshot = claim_snapshot
         cat = Catalog(catalog_root)
         # frontier_buckets=None -> sized at init_task from the seed count;
-        # the placeholder never writes data (an existing table's manifest
-        # overrides it inside BucketedTable, a new one is resized before
-        # the first commit)
+        # the placeholder count is never committed: an existing table's
+        # manifest overrides it, and every seeding path (run(seeds=...),
+        # the streamed seed ingest) makes its first commit through
+        # init_task, which resizes a new table first
         # stat_filter: per-bucket INITIAL-row counts ride the manifest so the
         # claim stage can prune claimable-free buckets without a scan
         self.frontier_t = cat.bucketed_table(
@@ -273,6 +274,16 @@ class CrawlJob:
             )
         return f.count()
 
+    def _append_tables(self) -> list[Table]:
+        """The tables an epoch writes before (or beside) its frontier
+        merge. None of them is keyed per item, so resume rolls them back
+        past an aborted epoch, and snapshot GC compacts them."""
+        return [t for t in (
+            self.pages_t, self.metrics_t, self.debug_t, self.contam_t,
+            self.neardup_pairs_t, self.hostgraph_t, self.hostrank_t,
+            self.neardup.table if self.neardup is not None else None,
+        ) if t is not None]
+
     def _rollback_appends(self) -> None:
         """Undo the appends of an epoch the kill cut short: each per-epoch
         append table goes back to its last version before the first one
@@ -287,13 +298,8 @@ class CrawlJob:
 
         done = [e for e in map(epoch_of, self.frontier_t.snapshots()) if e is not None]
         k = max(done, default=0)
-        tables = (
-            self.pages_t, self.metrics_t, self.debug_t, self.contam_t,
-            self.neardup_pairs_t, self.hostgraph_t, self.hostrank_t,
-            self.neardup.table if self.neardup is not None else None,
-        )
-        for t in tables:
-            vs = t.snapshots() if t is not None else []
+        for t in self._append_tables():
+            vs = t.snapshots()
             first = next((i for i, v in enumerate(vs) if (epoch_of(v) or 0) > k), None)
             if first == 0:  # the table began in an aborted epoch
                 shutil.rmtree(t.dir, ignore_errors=True)
@@ -767,17 +773,6 @@ class CrawlJob:
             if self.cfg.respect_robots:
                 candidates = filter_allowed(candidates, self.spark, self.robots)
             if self.cfg.dedup and self.cfg.bloom_prefilter:
-                if not self.seen_t.exists():
-                    # frontier seeded outside init_task (e.g. streaming
-                    # ingest, plans/streaming): bootstrap the blooms lazily
-                    self.seen_t.write_full(
-                        build_seen(
-                            frontier.select("url_hash"),
-                            self.cfg.seen_buckets,
-                            kind=self.cfg.seen_prefilter,
-                        ),
-                        tag=f"epoch-{epoch}-bootstrap",
-                    )
                 # ONE cached tagged frame: admitted rows for the frontier
                 # merge, folded shards for the seen commit — each dirty
                 # shard is read and cogrouped once per epoch
@@ -875,24 +870,29 @@ class CrawlJob:
         if tagged is not None:
             tagged.unpersist()
 
-        # 7b. snapshot GC (Iceberg expire_snapshots) every K epochs: without
-        # it a longliving crawl grows one manifest version + dir-set per
-        # epoch per table forever — the reference's Mongo updates are in
-        # place (queue.model.ts:70-90) and have no such growth. keep_last
-        # always covers the latest epoch-K tag, so kill-resume still works.
+        # 7b. snapshot GC (Iceberg expire_snapshots) every K epochs over
+        # every table the job owns: without it a longliving crawl grows one
+        # manifest version + dir-set per epoch per table forever — the
+        # reference's Mongo updates are in place (queue.model.ts:70-90) and
+        # have no such growth. keep_last always covers the latest epoch-K
+        # tag, so kill-resume still works.
         if self.cfg.snapshot_gc_epochs and epoch % self.cfg.snapshot_gc_epochs == 0:
             keep = self.cfg.snapshot_keep
-            # append-mode tables (pages/metrics) gain one data dir per
-            # epoch forever without compaction — expire_snapshots alone
-            # never deletes a dir the current version still references
-            # (VERDICT r3 what's-wrong #3). Size-tiered compaction first
-            # bounds the current dir list; expiry then retires the dirs
-            # only old versions reference.
+            # the append tables gain one data dir per bucket per epoch
+            # forever without compaction — expire_snapshots alone never
+            # deletes a dir the current version still references (VERDICT
+            # r3 what's-wrong #3). Size-tiered compaction first bounds each
+            # bucket's dir list; expiry then retires the dirs only old
+            # versions reference. The frontier bounds its own dirs in the
+            # merge (_FRONTIER_MAX_DIRS); the seen merge and the proxy pool
+            # rewrite what they touch.
             max_dirs = keep + self.cfg.snapshot_gc_epochs
-            for t in (self.pages_t, self.metrics_t):
+            appends = self._append_tables()
+            for t in appends:
                 t.compact_small(self.spark, max_dirs=max_dirs)
-            for t in (self.frontier_t, self.pages_t, self.metrics_t, self.seen_t):
-                t.expire_snapshots(keep_last=keep)
+            for t in (self.frontier_t, self.seen_t, self.proxy_t, *appends):
+                if t is not None:
+                    t.expire_snapshots(keep_last=keep)
 
         # 7. termination predicate (A2) — new initial rows (discoveries or
         # retryable re-enqueues) imply not-finished without another job

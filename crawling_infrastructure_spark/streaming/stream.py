@@ -23,7 +23,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from crawling_infrastructure_spark.operators.frontier import FRONTIER_COLS, frontier_rows
+from crawling_infrastructure_spark.operators.frontier import (
+    FRONTIER_COLS,
+    assign_regions,
+    frontier_rows,
+)
 from crawling_infrastructure_spark.operators.robots import filter_allowed
 from crawling_infrastructure_spark.operators.seen import SHARD, admitted_rows, seen_shards
 from crawling_infrastructure_spark.plans.epoch import CrawlJob
@@ -47,31 +51,35 @@ def run_seed_ingest(
     seeds_dir: str,
     job: CrawlJob,
     checkpoint_dir: str,
-    priority: int = 1,
 ) -> None:
     """Stream seeds into the frontier with exactly-once, deduped admission.
 
     foreachBatch gives us the batch DataFrame + a monotonically increasing
-    batch_id; inside the closure we run the SAME admission plan the epoch
-    loop uses — robots filter, then, when the seen table exists, the
+    batch_id. The batch that finds no frontier seeds the task through
+    ``job.init_task`` (regions, robots, bucket sizing, the seen set), as a
+    seed list would. Every later batch runs the SAME admission plan the
+    epoch loop uses — region stamps, robots filter, then, when the job keeps
+    a seen set, the
     one-pass seen admission (operators/seen.filter_unseen: one cached
     tagged frame of admitted rows + folded seen shards). The admitted rows
-    land as a *bucket append* (catalog.BucketedTable.append), so
-    per-batch write volume is O(batch), never O(frontier); the shards then
-    commit over their seen buckets, so an epoch interleaved with the stream
-    finds the streamed URLs in the seen set and the dedup stays EXACT.
-    Without a seen table the batch anti-joins the frontier.
+    land as a *bucket append* (catalog.Table.append), so per-batch write
+    volume is O(batch), never O(frontier); the shards then commit over
+    their seen buckets, so an epoch interleaved with the stream finds the
+    streamed URLs in the seen set and the dedup stays EXACT. Without a
+    seen set the batch anti-joins the frontier.
     """
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        rows = frontier_rows(batch_df, priority, epoch=0)
+        if not job.frontier_t.exists():
+            job.init_task(batch_df)
+            return
+        rows = frontier_rows(batch_df, job.cfg.priority, epoch=0)
+        if job.region_map is not None:
+            rows = assign_regions(rows, job.region_map)
         if job.cfg.respect_robots:
             rows = filter_allowed(rows, spark, job.robots)
         tag = f"stream-batch-{batch_id}"
-        if not job.frontier_t.exists():
-            job.frontier_t.write_full(rows, tag=tag)
-            return
-        if job.cfg.dedup and job.cfg.bloom_prefilter and job.seen_t.exists():
+        if job.cfg.dedup and job.cfg.bloom_prefilter:
             tagged = job._admit_unseen(rows).cache()
             grow = tagged.agg(
                 F.count(F.when(~F.col(SHARD), 1)).alias("n"),

@@ -4,9 +4,10 @@ robots.txt filtering (north_rule addition)."""
 import os
 
 import pytest
+from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from crawling_infrastructure_spark.catalog import BucketedTable, Catalog
+from crawling_infrastructure_spark.catalog import BucketedTable
 from crawling_infrastructure_spark.config import TaskConfig
 from crawling_infrastructure_spark.operators.claim import claim_batch, mark_running
 from crawling_infrastructure_spark.operators.frontier import frontier_rows
@@ -105,18 +106,6 @@ def test_kill_in_epoch_merge_resumes_without_duplicate_pages(
     assert job2.metrics_t.read(spark).filter(F.col("epoch") == kill_epoch).count() == 0
 
 
-def test_flat_expire_snapshots_removes_uncommitted_dir(spark, tmp_path):
-    t = Catalog(str(tmp_path)).table("pages")
-    for i in range(3):
-        t.append(spark.range(i, i + 1).toDF("id"), tag=f"epoch-{i}")
-    # a write that died before its manifest commit
-    orphan = os.path.join(t.dir, "v_00000099_deadbeef")
-    spark.range(5).write.parquet(orphan)
-    t.expire_snapshots(keep_last=1)
-    assert not os.path.exists(orphan)
-    assert sorted(r["id"] for r in t.read(spark).collect()) == [0, 1, 2]
-
-
 def test_frontier_dirs_stay_bounded_and_resume_with_keep_one(
     spark, corpus, tmp_path, monkeypatch
 ):
@@ -151,6 +140,53 @@ def test_frontier_dirs_stay_bounded_and_resume_with_keep_one(
     assert [v["tag"] for v in job.frontier_t.snapshots()] == [f"epoch-{epoch}"]
     reopened = CrawlJob(spark, root, corpus, cfg, outcome_fn=fetch_outcome)
     assert reopened.resume() == epoch
+
+
+def test_snapshot_gc_bounds_every_job_table(spark, corpus, tmp_path):
+    """GC covers every table the job owns, the optional ones too: with GC
+    every epoch and keep 1, each holds at most keep versions, at most
+    keep + gc-interval dirs per bucket, and no data dir on disk that its
+    kept version does not name; resume still finds the last epoch."""
+    cfg = TaskConfig(
+        task_id="gcall", max_items_per_second=10, epoch_seconds=2,
+        snapshot_gc_epochs=1, snapshot_keep=1, neardup_pages=True,
+        link_prioritize=True, store_browser_debug=True,
+    )
+    pool = spark.createDataFrame([
+        Row(proxy=f"10.9.0.{i}:8080", proxy_fail_counter=0, last_used=i,
+            obtain_counter=0, status="functional", block_counter=0, last_blocked=0)
+        for i in range(4)
+    ])
+    eval_docs = spark.createDataFrame(
+        [(0, "an evaluation document that no crawled page contains")],
+        "doc_id long, text string",
+    )
+    root = str(tmp_path)
+
+    def open_job():
+        return CrawlJob(spark, root, corpus, cfg, outcome_fn=fetch_outcome,
+                        proxies=pool, eval_docs=eval_docs)
+
+    job = open_job()
+    job.init_task(seeds_from_list(spark, seed_urls(N_HOSTS)))
+    for epoch in (1, 2):
+        job.run_epoch(epoch)
+    tables = (
+        job.frontier_t, job.seen_t, job.proxy_t, job.pages_t, job.metrics_t,
+        job.debug_t, job.contam_t, job.neardup_pairs_t, job.neardup.table,
+        job.hostgraph_t, job.hostrank_t,
+    )
+    for t in tables:
+        versions = t.snapshots()
+        assert len(versions) <= cfg.snapshot_keep, (t.name, len(versions))
+        per_bucket = max(len(d) for d in t._current_buckets().values())
+        assert per_bucket <= cfg.snapshot_keep + cfg.snapshot_gc_epochs, (t.name, per_bucket)
+        named = {
+            os.path.relpath(d, t.dir).split(os.sep)[0]
+            for v in versions for d in t._version_dirs(v)
+        }
+        assert {e for e in os.listdir(t.dir) if e.startswith("v_")} == named, t.name
+    assert open_job().resume() == 2
 
 
 def test_robots_longest_match():

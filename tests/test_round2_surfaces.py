@@ -1,13 +1,12 @@
 """Round-2 surfaces: U5 predicate re-enqueue, §2.10 CrawlFunction hooks,
-F12/F13 adaptive budget, JVM robots parity, U6 pause/resume, J2 regions,
-and the bucketed-catalog O(batch) write-back property."""
+F12/F13 adaptive budget, JVM robots parity, U6 pause/resume and J2
+regions."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from crawling_infrastructure_spark.catalog import Catalog
 from crawling_infrastructure_spark.config import TaskConfig
 from crawling_infrastructure_spark.operators.fetch import CrawlFunction
 from crawling_infrastructure_spark.operators.frontier import assign_regions, frontier_rows
@@ -262,87 +261,3 @@ def test_assign_regions_broadcast_join(spark):
     )
     got = {r["host"]: r["region"] for r in assign_regions(rows, rmap).collect()}
     assert got == {"a.example": "us-east-1", "b.example": "eu-west-1", "c.example": ""}
-
-
-# -- O(batch) write-back property -----------------------------------------------------
-
-def test_merge_buckets_rewrites_only_dirty(spark, tmp_path):
-    cat = Catalog(str(tmp_path / "cat"))
-    t = cat.bucketed_table(
-        "f", n_buckets=8, key="host_hash", stat_filter=f"status = {Status.INITIAL}"
-    )
-    rows = frontier_rows(
-        spark.createDataFrame([(f"https://h{i}.example/p",) for i in range(40)], ["item"]),
-        1,
-        0,
-    )
-    t.write_full(rows, tag="v1")
-    before = t._current_buckets()
-    one = t.read(spark).limit(1).collect()[0]
-    from crawling_infrastructure_spark.schema import FRONTIER_SCHEMA
-
-    one_df = spark.createDataFrame([one], FRONTIER_SCHEMA)
-    dirty = t.bucket_ids_of(one_df)
-    delta = one_df.withColumn("status", F.lit(1).cast("int"))
-    t.merge_buckets(delta, dirty, tag="v2")
-    after = t._current_buckets()
-    changed = {b for b in after if after[b] != before.get(b)}
-    assert changed == {str(b) for b in dirty}          # only dirty buckets moved
-    untouched = set(before) - changed
-    assert all(after[b] == before[b] for b in untouched)  # carried by reference
-    # dirty bucket now holds exactly the delta; total = delta + untouched rows
-    got = t.read_buckets(spark, dirty).collect()
-    assert len(got) == 1 and got[0]["status"] == 1
-    n_dirty_before = len(
-        [r for r in rows.collect()]
-    ) - t.read_buckets(spark, [int(b) for b in untouched]).count()
-    assert t.read(spark).count() == 40 - n_dirty_before + 1
-
-    # rows outside ``dirty`` ride the same merge as appends: their buckets
-    # keep every prior dir and gain exactly one; the dirty bucket is still
-    # replaced, every other bucket carried over
-    extra = frontier_rows(
-        spark.createDataFrame([(f"https://x{i}.example/q",) for i in range(40)], ["item"]),
-        1,
-        1,
-    )
-    n_before = t.read(spark).count()
-    t.merge_buckets(delta.unionByName(extra), dirty, tag="v3")
-    after3 = t._current_buckets()
-    dirty_keys = {str(b) for b in dirty}
-    grown = {str(b) for b in t.bucket_ids_of(extra)} - dirty_keys
-    assert grown
-    for b in grown:
-        prior = after.get(b, [])
-        assert after3[b][: len(prior)] == prior and len(after3[b]) == len(prior) + 1
-    assert all(after3[b] == after[b] for b in set(after) - grown - dirty_keys)
-    assert all(len(after3[b]) == 1 for b in dirty_keys)
-    assert t.read(spark).count() == n_before + 40
-    # the manifest's per-bucket initial counts match a recount
-    recount = {
-        int(r["b"]): int(r["count"])
-        for r in t.read(spark)
-        .filter(F.col("status") == Status.INITIAL)
-        .groupBy(F.pmod(F.col("host_hash"), F.lit(8)).cast("int").alias("b"))
-        .count()
-        .collect()
-    }
-    assert {b: n for b, n in t.stat_counts().items() if n} == recount
-
-
-def test_append_buckets_is_o_batch(spark, tmp_path):
-    cat = Catalog(str(tmp_path / "cat2"))
-    t = cat.bucketed_table("f", n_buckets=8, key="host_hash")
-    mk = lambda lo, hi: frontier_rows(
-        spark.createDataFrame([(f"https://h{i}.example/p",) for i in range(lo, hi)], ["item"]),
-        1,
-        0,
-    )
-    t.write_full(mk(0, 32), tag="v1")
-    before = t._current_buckets()
-    t.append(mk(32, 36), tag="v2")
-    after = t._current_buckets()
-    assert t.read(spark).count() == 36
-    # appended dirs only on buckets that received rows; their old dirs remain
-    for b, dirs in before.items():
-        assert after[b][: len(dirs)] == dirs

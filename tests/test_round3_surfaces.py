@@ -1,5 +1,4 @@
-"""Round-3 surfaces: adaptive bucket sizing + manifest-persisted layout,
-snapshot GC for longliving crawls, html carry-vs-strip page parity, the
+"""Round-3 surfaces: bucket sizing from the seed count, snapshot GC for longliving crawls, html carry-vs-strip page parity, the
 item_key (F10 getKey) column, pandas-callable reenqueue predicates, the
 sorted signed-safe streaming-dedup state, and toFixed-parity rounding."""
 
@@ -11,7 +10,6 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
-from crawling_infrastructure_spark.catalog import Catalog, suggest_buckets
 from crawling_infrastructure_spark.config import TaskConfig
 from crawling_infrastructure_spark.functions.format import format_bytes
 from crawling_infrastructure_spark.operators.fetch import CrawlFunction
@@ -20,33 +18,6 @@ from crawling_infrastructure_spark.plans.epoch import CrawlJob
 from crawling_infrastructure_spark.sources.seeds import seeds_from_list
 from crawling_infrastructure_spark.streaming.stream import streaming_dedup
 from crawling_infrastructure_spark.synth import fetch_outcome, seed_urls
-
-
-# -- bucket-count sizing rule (VERDICT r2 item 9) ----------------------------
-
-def test_suggest_buckets_rule():
-    assert suggest_buckets(0) == 1
-    assert suggest_buckets(10_000) == 1          # sandbox frontier: unbucketed
-    assert suggest_buckets(20_000_000) == 32     # ~1M rows/bucket
-    assert suggest_buckets(10_000_000_000) == 16384  # 10^10 design point
-    assert suggest_buckets(10**14) == 16384      # hi clamp
-    # power of two throughout
-    for n in (1, 10**4, 10**6, 10**8, 10**10):
-        assert bin(suggest_buckets(n)).count("1") == 1
-
-
-def test_bucket_count_persisted_in_manifest(spark, tmp_path):
-    cat = Catalog(str(tmp_path / "cat"))
-    t = cat.bucketed_table("layout", 8, key="host_hash")
-    df = spark.range(100).select(
-        F.col("id").alias("host_hash"), F.lit("x").alias("v")
-    )
-    t.write_full(df)
-    # reopening with a DIFFERENT constructor count must yield the on-disk one:
-    # the bucket count is physical layout, not session config
-    t2 = Catalog(str(tmp_path / "cat")).bucketed_table("layout", 64, key="host_hash")
-    assert t2.n_buckets == 8
-    assert t2.read(spark).count() == 100
 
 
 def test_job_sizes_buckets_from_seed_count(spark, corpus, tmp_path):

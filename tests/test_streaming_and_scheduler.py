@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from crawling_infrastructure_spark.catalog import suggest_buckets
 from crawling_infrastructure_spark.config import (
     PRIORITY_ABSOLUTE,
     PRIORITY_RELATIVE,
@@ -20,7 +21,7 @@ from crawling_infrastructure_spark.streaming.stream import (
     streaming_dedup,
     windowed_progress,
 )
-from crawling_infrastructure_spark.synth import fetch_outcome, seed_urls
+from crawling_infrastructure_spark.synth import fetch_outcome, host_name, seed_urls
 from tests.conftest import N_HOSTS
 
 
@@ -45,6 +46,55 @@ def test_seed_stream_ingest_dedups_across_batches(spark, corpus, tmp_path):
     # re-running with no new files must be a no-op (exactly-once source)
     run_seed_ingest(spark, str(seeds_dir), job, str(ckpt))
     assert job.frontier_t.read(spark).count() == 6
+
+
+def test_seed_stream_first_batch_seeds_like_init_task(spark, corpus, tmp_path):
+    """A stream that finds no frontier seeds the task as a seed list would:
+    bucket count from the seed count (not the placeholder), region stamps,
+    and a seen set holding exactly the frontier's hashes."""
+    seeds_dir = tmp_path / "seeds_in"
+    os.makedirs(seeds_dir)
+    root = str(tmp_path / "cat")
+    cfg = TaskConfig(task_id="stream_init", max_items_per_second=1, seen_buckets=4)
+    regions = spark.createDataFrame(
+        [(host_name(k), "eu-west-1") for k in range(4)], ["host", "region"]
+    )
+    job = CrawlJob(spark, root, corpus, cfg, outcome_fn=fetch_outcome, region_map=regions)
+    (seeds_dir / "batch1.txt").write_text("\n".join(seed_urls(4)) + "\n")
+    run_seed_ingest(spark, str(seeds_dir), job, str(tmp_path / "ckpt"))
+
+    n_buckets = suggest_buckets(4 * CrawlJob.SEED_GROWTH_FACTOR)
+    assert CrawlJob(spark, root, corpus, cfg).frontier_t.n_buckets == n_buckets
+    rows = job.frontier_t.read(spark).collect()
+    assert len(rows) == 4 and {r.region for r in rows} == {"eu-west-1"}
+    seen = set()
+    for r in job.seen_t.read(spark).collect():
+        seen |= set(np.frombuffer(bytes(r.hashes), dtype=np.int64).tolist())
+    assert seen == {r.url_hash for r in rows}
+
+
+def test_seed_stream_after_empty_first_batch(spark, corpus, tmp_path):
+    """A first batch with no valid URL seeds an empty task; the next batch
+    is admitted through the (empty) seen set with its region stamps."""
+    seeds_dir = tmp_path / "seeds_in"
+    os.makedirs(seeds_dir)
+    cfg = TaskConfig(task_id="stream_empty", max_items_per_second=1, seen_buckets=4)
+    regions = spark.createDataFrame(
+        [(host_name(k), "eu-west-1") for k in range(4)], ["host", "region"]
+    )
+    job = CrawlJob(spark, str(tmp_path / "cat"), corpus, cfg, region_map=regions)
+    (seeds_dir / "batch0.txt").write_text("not a url\nftp://x.example/\n")
+    run_seed_ingest(spark, str(seeds_dir), job, str(tmp_path / "ckpt"))
+    assert job.frontier_t.exists() and job.frontier_t.read(spark).count() == 0
+
+    (seeds_dir / "batch1.txt").write_text("\n".join(seed_urls(4)) + "\n")
+    run_seed_ingest(spark, str(seeds_dir), job, str(tmp_path / "ckpt"))
+    rows = job.frontier_t.read(spark).collect()
+    assert len(rows) == 4 and {r.region for r in rows} == {"eu-west-1"}
+    seen = set()
+    for r in job.seen_t.read(spark).collect():
+        seen |= set(np.frombuffer(bytes(r.hashes), dtype=np.int64).tolist())
+    assert seen == {r.url_hash for r in rows}
 
 
 def test_seed_stream_ingest_through_seen_set(spark, corpus, tmp_path):
