@@ -19,6 +19,13 @@ same contract over plain Parquet with an atomic-rename manifest:
   Iceberg append snapshot), ``write_full`` every dir (an overwrite
   snapshot), ``merge_buckets`` the dirty buckets' dirs (MERGE INTO),
   ``compact_small`` the small dirs it rewrites
+- writer-side value sets (the analogue of the column statistics an Iceberg
+  manifest keeps per data file): a table built with ``stat_col`` records,
+  per data dir, the distinct values of that column, collected by an
+  Observation on the write job itself — no read-back. ``buckets_with(v)``
+  answers "which buckets may hold rows with value v?" from the manifest
+  alone. ``stat_col`` must be low-cardinality (the frontier's ``status``):
+  the sets live in the manifest JSON
 - commit = write manifest to a temp file + ``os.replace`` (atomic on POSIX);
   the epoch driver is the single writer, so this is race-free by
   construction — exactly the property the reference lacked and papered over
@@ -39,7 +46,7 @@ import shutil
 import uuid
 from collections.abc import Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -81,6 +88,10 @@ class Table:
     Bucket id = ``pmod(key, n_buckets)`` — non-negative even for signed
     xxhash64 keys; for tables already keyed by a bucket ordinal in
     [0, n_buckets) (the seen table) pmod is the identity.
+
+    With ``stat_col`` set, every write records each new dir's set of
+    ``stat_col`` values in the version (one-bucket tables too), so
+    ``buckets_with`` prunes buckets without a scan.
     """
 
     BKT = "_bkt"
@@ -91,21 +102,14 @@ class Table:
         name: str,
         n_buckets: int = 1,
         key: str | None = None,
-        stat_filter: str | None = None,
+        stat_col: str | None = None,
     ):
         self.dir = os.path.join(root, name)
         self.name = name
         self._manifest_path = os.path.join(self.dir, "_manifest.json")
         self.key = key
-        # ``stat_filter`` (a SQL predicate, e.g. "status = 0") turns on
-        # per-dir matching-row counts in the manifest — the Iceberg-manifest-
-        # statistics analogue that lets readers prune buckets with zero
-        # matching rows WITHOUT any scan (the claim stage's bucket index,
-        # VERDICT r3 #2-next). Maintained at commit time from the just-
-        # written dirs; carried-over dirs keep their counts. Only active in
-        # the bucketed layout (n_buckets > 1) — the single-bucket layout of
-        # small frontiers never pays the extra count job.
-        self.stat_filter = stat_filter
+        # low-cardinality column whose per-dir value sets the manifest keeps
+        self.stat_col = stat_col
         # the bucket count is part of the table's physical layout: a table
         # that already has data dictates it (persisted at first commit), so
         # resume/reopen always agrees with what's on disk regardless of the
@@ -197,32 +201,6 @@ class Table:
                 out[entry.split("=", 1)[1]] = os.path.join(path, entry)
         return out
 
-    def _stats_for(
-        self, df: DataFrame, root_dir: str, written: dict[str, str]
-    ) -> dict[str, int] | None:
-        """Per-dir counts of rows matching stat_filter among the JUST-written
-        dirs (``df`` is the frame that was written) — one columnar job over
-        data still in the page cache, pruned to the filter's columns.
-        Returns {dir_path: n} (0 for written buckets with no matching rows),
-        or None when stat tracking is off."""
-        if not self.stat_filter or self.n_buckets == 1 or not written:
-            return None
-        # the known schema (written columns + the _bkt partition column)
-        # skips the schema-inference job partition discovery would launch
-        schema = T.StructType(
-            [f for f in df.schema.fields if f.name != self.BKT]
-            + [T.StructField(self.BKT, T.IntegerType(), True)]
-        )
-        counts = {
-            int(r["b"]): int(r["n"])
-            for r in df.sparkSession.read.schema(schema).parquet(root_dir)
-            .where(self.stat_filter)
-            .groupBy(F.col(self.BKT).cast("int").alias("b"))
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        return {p: counts.get(int(b), 0) for b, p in written.items()}
-
     def _write(
         self,
         df: DataFrame,
@@ -233,13 +211,18 @@ class Table:
         """The one write primitive: write ``df`` as one new data dir (one
         subdir per bucket with rows) and commit a version naming the
         current dirs minus ``drop`` plus the new subdirs; a bucket left
-        with no dirs is dropped. Stats of carried dirs ride along; written
-        dirs get fresh counts."""
+        with no dirs is dropped. With ``stat_col`` set, the written dirs'
+        value sets come from an Observation on this very write job and the
+        carried dirs keep theirs."""
         m = self._load()
         version = self._next_version(m)
         d = os.path.join(self.dir, f"v_{version:08d}_{uuid.uuid4().hex[:8]}")
+        obs = None
+        if self.stat_col:
+            obs = Observation()
+            bkt = self._bucket_col() if self.n_buckets > 1 else F.lit(0)
+            df = df.observe(obs, F.collect_set(F.struct(bkt, self.stat_col)).alias("s"))
         written = self._write_partitioned(df, d, n_parts)
-        new_stats = self._stats_for(df, d, written)
         drop = set(drop)
         buckets: dict[str, list[str]] = {}
         for b, dirs in self._current_buckets(m).items():
@@ -249,11 +232,16 @@ class Table:
         for b, p in written.items():
             buckets.setdefault(b, []).append(p)
         entry: dict = {"version": version, "buckets": buckets, "tag": tag}
-        if self.stat_filter and self.n_buckets > 1:
-            cur = self._current(m) or {}
-            stats = {**(cur.get("dir_stats") or {}), **(new_stats or {})}
-            entry["dir_stats"] = {
-                p: stats[p] for dirs in buckets.values() for p in dirs if p in stats
+        if obs is not None:
+            seen: dict[str, set] = {}
+            # a bucketed write of no rows has no metrics to read: AQE drops
+            # the empty shuffle stage, and the observation with it
+            for b, value in obs.get["s"] if written else ():
+                seen.setdefault(str(b), set()).add(value)
+            carried = (self._current(m) or {}).get("dir_values") or {}
+            values = {**carried, **{p: sorted(seen.get(b, ())) for b, p in written.items()}}
+            entry["dir_values"] = {
+                p: values[p] for dirs in buckets.values() for p in dirs if p in values
             }
         m["versions"].append(entry)
         m["current"] = version
@@ -279,22 +267,19 @@ class Table:
         drop = [p for b in dirty for p in cur.get(str(b), [])]
         return self._write(df, drop, tag, n_parts=max(1, len(dirty)))
 
-    def stat_counts(self) -> dict[int, int] | None:
-        """{bucket_id: rows matching stat_filter} for the CURRENT version,
-        straight from the manifest — zero Spark jobs. None when tracking is
-        off or any current dir predates it (reader must fall back to a scan)."""
-        if not self.stat_filter or self.n_buckets == 1:
-            return None
+    def buckets_with(self, value) -> list[int]:
+        """Buckets of the CURRENT version whose rows may hold ``stat_col ==
+        value``, straight from the manifest: zero Spark jobs. A dir with no
+        recorded value set (written without ``stat_col``, or before value
+        sets existed) counts as holding every value."""
         v = self._current(self._load())
         if v is None:
-            return None
-        ds = v.get("dir_stats") or {}
-        out: dict[int, int] = {}
-        for b, dirs in v["buckets"].items():
-            if any(d not in ds for d in dirs):
-                return None
-            out[int(b)] = sum(ds[d] for d in dirs)
-        return out
+            return []
+        values = v.get("dir_values") or {}
+        return sorted(
+            int(b) for b, dirs in v["buckets"].items()
+            if any(value in values.get(p, (value,)) for p in dirs)
+        )
 
     def _read_dirs(
         self, spark: SparkSession, dirs: list[str], schema: T.StructType | None
@@ -414,9 +399,9 @@ class BucketedTable(Table):
         name: str,
         n_buckets: int,
         key: str,
-        stat_filter: str | None = None,
+        stat_col: str | None = None,
     ):
-        super().__init__(root, name, n_buckets, key, stat_filter)
+        super().__init__(root, name, n_buckets, key, stat_col)
 
 
 class Catalog:
@@ -430,9 +415,9 @@ class Catalog:
         return Table(self.root, name)
 
     def bucketed_table(
-        self, name: str, n_buckets: int, key: str, stat_filter: str | None = None
+        self, name: str, n_buckets: int, key: str, stat_col: str | None = None
     ) -> BucketedTable:
-        return BucketedTable(self.root, name, n_buckets, key, stat_filter=stat_filter)
+        return BucketedTable(self.root, name, n_buckets, key, stat_col=stat_col)
 
     def drop(self, name: str) -> None:
         shutil.rmtree(os.path.join(self.root, name), ignore_errors=True)

@@ -13,6 +13,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def _driver_mem() -> str:
+    """The default driver heap: 48g, or half the machine's physical memory
+    (in whole gigabytes) when it has less than 96 GB — a local session
+    shares the box with its Python workers and page cache, and an uncapped
+    heap grows to fill it."""
+    half_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**31
+    return f"{max(1, min(48, half_gb))}g"
+
+
 def get_spark(
     app_name: str = "crawling_infrastructure_spark",
     cpus: int | None = None,
@@ -64,7 +73,7 @@ def get_spark(
         # workers that's memory-bandwidth thrash (measured: fetch 2x SLOWER
         # at 32 cores than 8). 1024 records ~= 30 MB keeps workers in cache.
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "1024")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", _driver_mem()))
         .config(
             "spark.driver.extraJavaOptions",
             os.environ.get("SPARK_GRAFT_JAVA_OPTS", ""),

@@ -1,6 +1,6 @@
 """The catalog (crawling_infrastructure_spark/catalog.py): bucket-count
 sizing and the manifest-persisted layout, the write primitive's
-merge/append semantics, manifest stat counts, size-tiered compaction,
+merge/append semantics, manifest status sets, size-tiered compaction,
 snapshot expiry, and the calls perfbench's tracer wraps."""
 
 from __future__ import annotations
@@ -9,12 +9,28 @@ import os
 
 from pyspark.sql import functions as F
 
-from crawling_infrastructure_spark.catalog import Catalog, suggest_buckets
+from crawling_infrastructure_spark.catalog import Catalog, Table, suggest_buckets
 from crawling_infrastructure_spark.operators.frontier import frontier_rows
 from crawling_infrastructure_spark.schema import FRONTIER_SCHEMA, Status
 from tests.conftest import toy_frontier
 
-INITIAL_FILTER = f"status = {int(Status.INITIAL)}"
+STATUSES = (Status.INITIAL, Status.RUNNING, Status.COMPLETED, Status.FAILED)
+
+
+def assert_status_sets_exact(t, spark):
+    """``t.buckets_with(s)`` equals a recount of the buckets holding rows in
+    status ``s``, for every status."""
+    nb = t.n_buckets
+    held: dict[int, set[int]] = {}
+    for r in (
+        t.read(spark)
+        .select("status", F.pmod(F.col("host_hash"), F.lit(nb)).cast("int").alias("b"))
+        .distinct()
+        .collect()
+    ):
+        held.setdefault(r["status"], set()).add(r["b"])
+    for s in STATUSES:
+        assert t.buckets_with(s) == sorted(held.get(s, ())), s
 
 
 # -- bucket-count sizing rule (VERDICT r2 item 9) ----------------------------
@@ -48,9 +64,7 @@ def test_bucket_count_persisted_in_manifest(spark, tmp_path):
 
 def test_merge_buckets_rewrites_only_dirty(spark, tmp_path):
     cat = Catalog(str(tmp_path / "cat"))
-    t = cat.bucketed_table(
-        "f", n_buckets=8, key="host_hash", stat_filter=f"status = {Status.INITIAL}"
-    )
+    t = cat.bucketed_table("f", n_buckets=8, key="host_hash", stat_col="status")
     rows = frontier_rows(
         spark.createDataFrame([(f"https://h{i}.example/p",) for i in range(40)], ["item"]),
         1,
@@ -98,16 +112,8 @@ def test_merge_buckets_rewrites_only_dirty(spark, tmp_path):
     assert all(after3[b] == after[b] for b in set(after) - grown - dirty_keys)
     assert all(len(after3[b]) == 1 for b in dirty_keys)
     assert t.read(spark).count() == n_before + 40
-    # the manifest's per-bucket initial counts match a recount
-    recount = {
-        int(r["b"]): int(r["count"])
-        for r in t.read(spark)
-        .filter(F.col("status") == Status.INITIAL)
-        .groupBy(F.pmod(F.col("host_hash"), F.lit(8)).cast("int").alias("b"))
-        .count()
-        .collect()
-    }
-    assert {b: n for b, n in t.stat_counts().items() if n} == recount
+    # the manifest's per-bucket status sets match a recount
+    assert_status_sets_exact(t, spark)
 
 
 def test_append_buckets_is_o_batch(spark, tmp_path):
@@ -128,45 +134,28 @@ def test_append_buckets_is_o_batch(spark, tmp_path):
         assert after[b][: len(dirs)] == dirs
 
 
-# -- 1b. manifest stat counts maintained across write/merge/append -----------
+# -- 1b. manifest status sets maintained across write/merge/append -----------
 
-def _actual_initial_counts(df, nb):
-    rows = (
-        df.filter(F.col("status") == Status.INITIAL)
-        .groupBy(F.pmod(F.col("host_hash"), F.lit(nb)).cast("int").alias("b"))
-        .count()
-        .collect()
-    )
-    return {int(r["b"]): int(r["count"]) for r in rows}
-
-
-def test_bucketed_stat_counts_maintained(spark, tmp_path):
+def test_bucketed_status_sets_maintained(spark, tmp_path):
     nb = 8
     cat = Catalog(str(tmp_path))
-    t = cat.bucketed_table("f", nb, key="host_hash", stat_filter=INITIAL_FILTER)
-    f = toy_frontier(spark, 600, 13)
-    t.write_full(f, tag="t0")
-    expected = _actual_initial_counts(t.read(spark), nb)
-    got = t.stat_counts()
-    assert got is not None
-    assert {b: n for b, n in got.items() if n} == expected
+    t = cat.bucketed_table("f", nb, key="host_hash", stat_col="status")
+    t.write_full(toy_frontier(spark, 600, 13), tag="t0")
+    assert_status_sets_exact(t, spark)
+    initial = t.buckets_with(Status.INITIAL)
+    assert initial and t.buckets_with(Status.COMPLETED)
 
-    # merge two dirty buckets flipping everything to completed: their counts
-    # drop to 0, carried buckets keep their counts without any recount
-    dirty = sorted(expected)[:2]
+    # merge two dirty buckets flipping everything to completed: they leave
+    # the initial set, carried buckets keep their sets without a recount
+    dirty = initial[:2]
     fd = t.read_buckets(spark, dirty, FRONTIER_SCHEMA)
     t.merge_buckets(
         fd.withColumn("status", F.lit(int(Status.COMPLETED))), dirty, tag="flip"
     )
-    got2 = t.stat_counts()
-    assert got2 is not None
-    for b in dirty:
-        assert got2.get(b, 0) == 0
-    for b, n in expected.items():
-        if b not in dirty:
-            assert got2[b] == n
+    assert t.buckets_with(Status.INITIAL) == initial[2:]
+    assert_status_sets_exact(t, spark)
 
-    # append admits new initial rows: receiving buckets gain counts
+    # append admits new initial rows: receiving buckets rejoin the set
     extra = frontier_rows(
         spark.createDataFrame(
             [(f"https://hx{i}.example/q{i}",) for i in range(40)], "item string"
@@ -175,9 +164,26 @@ def test_bucketed_stat_counts_maintained(spark, tmp_path):
         epoch=1,
     )
     t.append(extra, tag="grow")
-    got3 = t.stat_counts()
-    grown = _actual_initial_counts(t.read(spark), nb)
-    assert {b: n for b, n in got3.items() if n} == grown
+    assert_status_sets_exact(t, spark)
+    # a write of no rows records nothing and carries every set over
+    t.append(spark.createDataFrame([], FRONTIER_SCHEMA), tag="none")
+    assert_status_sets_exact(t, spark)
+
+    # a one-bucket table records its dir's values too
+    flat = Table(str(tmp_path), "flat", stat_col="status")
+    flat.write_full(toy_frontier(spark, 200, 5), tag="t0")
+    assert flat.buckets_with(Status.COMPLETED) == [0]
+    assert flat.buckets_with(Status.RUNNING) == []
+    assert_status_sets_exact(flat, spark)
+
+    # a version with no recorded value sets (written before they existed)
+    # answers every bucket for every value
+    m = t._load()
+    del t._current(m)["dir_values"]
+    t._commit(m)
+    every = sorted(int(b) for b in t._current_buckets())
+    for s in STATUSES:
+        assert t.buckets_with(s) == every
 
 
 # -- 2. compaction bounds append-table dirs ----------------------------------
@@ -209,7 +215,7 @@ def test_table_compact_small(spark, tmp_path):
 def test_bucketed_compact_small(spark, tmp_path):
     nb = 4
     cat = Catalog(str(tmp_path))
-    t = cat.bucketed_table("seenish", nb, key="k", stat_filter=None)
+    t = cat.bucketed_table("seenish", nb, key="k")
     # one big dir in bucket 0 first, then six small appends to every bucket
     t.append(spark.range(2000).select((F.col("id") * nb + 1000).alias("k")), tag="big")
     (big,) = t._current_buckets()["0"]

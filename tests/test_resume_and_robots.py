@@ -20,8 +20,12 @@ from crawling_infrastructure_spark.synth import fetch_outcome, seed_urls
 from tests.conftest import N_HOSTS
 
 
-def test_kill_and_resume_heals_and_continues(spark, corpus, tmp_path):
-    cfg = TaskConfig(task_id="resume", max_items_per_second=2, epoch_seconds=10)
+@pytest.mark.parametrize("frontier_buckets", [None, 8])
+def test_kill_and_resume_heals_and_continues(spark, corpus, tmp_path, frontier_buckets):
+    cfg = TaskConfig(
+        task_id="resume", max_items_per_second=2, epoch_seconds=10,
+        frontier_buckets=frontier_buckets,
+    )
     job = CrawlJob(spark, str(tmp_path), corpus, cfg, outcome_fn=fetch_outcome)
     job.init_task(seeds_from_list(spark, seed_urls(N_HOSTS)))
     job.run_epoch(1)
@@ -29,13 +33,22 @@ def test_kill_and_resume_heals_and_continues(spark, corpus, tmp_path):
     f = job.frontier_t.read(spark)
     claimed = claim_batch(f, cfg)
     job.frontier_t.write_full(mark_running(f, claimed), tag="epoch-2-claim")
-    assert job.frontier_t.read(spark).filter(F.col("status") == Status.RUNNING).count() > 0
+    running = job.frontier_t.read(spark).filter(F.col("status") == Status.RUNNING)
+    assert running.count() > 0
+    # the manifest names exactly the buckets resume must heal
+    nb = job.frontier_t.n_buckets
+    assert job.frontier_t.buckets_with(Status.RUNNING) == sorted(
+        r["b"] for r in running.select(
+            F.pmod(F.col("host_hash"), F.lit(nb)).cast("int").alias("b")
+        ).distinct().collect()
+    )
 
     # fresh process: resume heals running -> initial, continues at epoch 3
     job2 = CrawlJob(spark, str(tmp_path), corpus, cfg, outcome_fn=fetch_outcome)
     hist = job2.run(max_epochs=1)
     assert hist[0].epoch == 3
     assert job2.frontier_t.read(spark).filter(F.col("status") == Status.RUNNING).count() == 0
+    assert job2.frontier_t.buckets_with(Status.RUNNING) == []
     assert hist[0].claimed == cfg.epoch_budget
 
 
