@@ -12,7 +12,7 @@ which needs a canonical form + stable hash. Rules (documented contract):
 5. trailing '?' stripped
 6. whitespace trimmed
 
-Every rule exists in BOTH a pure-Python form (pandas-UDF / oracle side) and a
+Every rule exists in BOTH a pure-Python form (driver / oracle side) and a
 Spark Column form (JVM codegen side); tests assert they agree. Hashing uses
 ``xxhash64`` (Spark built-in, seed 42) — 64-bit, collision-safe enough for a
 10^10 frontier when paired with the exact-url anti-join fallback.
@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -49,10 +48,6 @@ def canonicalize_url(url: str) -> str | None:
     if query in (None, "?"):
         query = ""
     return f"{scheme}://{host}{path}{query}"
-
-
-def canonicalize_url_series(urls: pd.Series) -> pd.Series:
-    return urls.map(canonicalize_url)
 
 
 def canonicalize_url_col(url: Column) -> Column:

@@ -304,7 +304,6 @@ def contamination(
     window: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
     eval_windows: DataFrame | None = None,
 ) -> DataFrame:
     """Benchmark contamination flags — (doc_id, n_eval_windows) for every
@@ -317,14 +316,12 @@ def contamination(
     benchmark-sized (10^4-10^6 docs -> 10^7-10^8 distinct window hashes of
     8 bytes each) while the training side is the 100 TB crawl. The eval
     window set therefore collapses to DISTINCT 60-bit md5-prefix hashes and
-    broadcasts (``broadcast_eval``), so the training side is ONE scan +
-    explode with a map-side hash probe — no shuffle of training data at
-    all. With ``broadcast_eval=False`` it degrades gracefully to a shuffle
-    semi-structured join on the window hash. Window sets are distinct per
-    doc on the training side and globally distinct on the eval side, so
-    ``count(*)`` after the join is exactly the number of DISTINCT
-    contaminated windows per training doc. Same hash/tokenization as
-    ``dedup.substring_dup_pairs`` (collision bound documented there).
+    always broadcasts, so the training side is ONE scan + explode with a
+    map-side hash probe — no shuffle of training data at all. Window sets
+    are distinct per doc on the training side and globally distinct on the
+    eval side, so ``count(*)`` after the join is exactly the number of
+    DISTINCT contaminated windows per training doc. Same hash/tokenization
+    as ``dedup.substring_dup_pairs`` (collision bound documented there).
     """
     from crawling_infrastructure_spark.operators.dedup import (
         _widen,
@@ -336,8 +333,7 @@ def contamination(
         if eval_windows is not None
         else eval_window_hashes(eval_docs, window, id_col, text_col)
     )
-    if broadcast_eval:
-        ev = F.broadcast(ev)
+    ev = F.broadcast(ev)
     # training side: hash inside the per-doc transform (the probe joins on
     # the hash anyway) and run the per-doc distinct AFTER the probe: the
     # eval side is globally distinct on wh, so the map-side join preserves
@@ -361,14 +357,13 @@ def decontaminate(
     window: int = 8,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_eval: bool = True,
 ) -> DataFrame:
     """``docs`` minus every document ``contamination`` flags — the actual
     pre-training hygiene step (drop training docs that leak the benchmark).
     One anti-join against the flag set; column set passes through."""
-    flagged = contamination(
-        docs, eval_docs, window, id_col, text_col, broadcast_eval
-    ).select(F.col("doc_id").alias(id_col))
+    flagged = contamination(docs, eval_docs, window, id_col, text_col).select(
+        F.col("doc_id").alias(id_col)
+    )
     return docs.join(flagged, id_col, "left_anti")
 
 

@@ -552,8 +552,7 @@ def simhash_neardup_pairs(
 
 
 def embedding_cosine_neardup(
-    emb: DataFrame, threshold: float = 0.95, block_col: str = "label",
-    broadcast_pairs: bool = True,
+    emb: DataFrame, threshold: float = 0.95, block_col: str = "label"
 ) -> DataFrame:
     """Near-duplicate vectors by cosine >= threshold, blocked by ``block_col``
     (the IVF-style bucket: at 10^9 vectors the block comes from a coarse
@@ -562,25 +561,24 @@ def embedding_cosine_neardup(
     Per-pair work is ONE unrolled codegen dot product: norms are computed
     per ROW before the join (identical fold, identical floats) instead of
     twice per pair, cutting the pair stage's array arithmetic 3x. Pair
-    strategy (guide §3.3 exploding-join trap): a plain block equi-join
-    shuffles a few MB into #blocks partitions which AQE coalesces into ONE
-    task whose join output then explodes 10^3x — measured 1.0 effective
-    cores at 2*10^4 vectors. ``broadcast_pairs=True`` broadcasts one side
-    and repartitions the other to the session parallelism (right only when
-    the WHOLE vector side fits in executor memory: the broadcast ships
-    every block, and the explicit hint bypasses
-    autoBroadcastJoinThreshold); False is the huge-corpus path — a salted
-    (block, salt) shuffle join that splits each block's quadratic group
-    across the cluster."""
+    strategy (``similarity._pair_join``, guide §3.3 exploding-join trap):
+    a plain block equi-join shuffles a few MB into #blocks partitions which
+    AQE coalesces into ONE task whose join output then explodes 10^3x —
+    measured 1.0 effective cores at 2*10^4 vectors. When the whole vector
+    side (rows x (dim x 4 + 16) bytes, from the aggregate that fixes
+    ``dim``) fits the session's autoBroadcastJoinThreshold, one side
+    broadcasts and the other is repartitioned to the session parallelism;
+    otherwise a salted (block, salt) shuffle join splits each block's
+    quadratic group across the cluster."""
     from crawling_infrastructure_spark.operators.similarity import (
         _cosine,
         _fixed_dim,
         _norm_expr,
-        _parallelism,
+        _pair_join,
         with_staged_dot,
     )
 
-    dim = _fixed_dim(emb, "embedding")
+    dim, n_bytes = _fixed_dim(emb, "embedding")
     norm = _norm_expr(F.col("embedding"), dim)
     a = emb.select(
         F.col("vec_id").alias("id_a"), F.col("embedding").alias("ea"),
@@ -590,14 +588,7 @@ def embedding_cosine_neardup(
         F.col("vec_id").alias("id_b"), F.col("embedding").alias("eb"),
         norm.alias("nb"), F.col(block_col).alias("blk"),
     )
-    if broadcast_pairs:
-        a = a.repartition(_parallelism(emb), "id_a")
-        pairs = a.join(F.broadcast(b), "blk")
-    else:
-        s = _parallelism(emb)
-        a_s = a.withColumn("_salt", F.pmod(F.col("id_a"), F.lit(s)))
-        b_s = b.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
-        pairs = a_s.join(b_s, ["blk", "_salt"]).drop("_salt")
+    pairs = _pair_join(a, b, "blk", "id_a", n_bytes)
     return (
         with_staged_dot(pairs.filter(F.col("id_a") < F.col("id_b")), "ea", "eb", "_dot", dim)
         .select(

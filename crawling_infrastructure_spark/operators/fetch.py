@@ -1,6 +1,6 @@
 """The fetch-map — SURVEY.md §2.8, an exact port of the reference's
 ``CrawlHandler.run`` state machine (crawler/src/handler.ts:51-206) as a
-vectorized ``groupBy(host).applyInPandas`` operator.
+vectorized ``mapInPandas`` operator.
 
 Semantics reproduced per item (with reference lines):
 - retries += 1 per attempt                       handler.ts:108
@@ -14,8 +14,9 @@ Fetching is hermetic (FIXTURES.md): URLs resolve against the synthetic pages
 corpus via a broadcast inner join (claimed side is epoch-budget-bounded, so
 the corpus is scanned map-side only — zero shuffle), and failures are
 injected deterministically from (url, epoch). A real-network deployment
-swaps ``HermeticFetcher`` for one whose ``fetch_group`` does HTTP I/O; the
-plan shape is unchanged.
+swaps ``HermeticFetcher`` for one whose ``fetch_group`` does HTTP I/O
+(operators/netfetch.NetworkFetcher) and passes no corpus; the plan is the
+same minus the resolve join.
 """
 
 from __future__ import annotations
@@ -212,35 +213,37 @@ def resolve_against_corpus(
 
 def fetch_batch(
     claimed: DataFrame,
-    corpus: DataFrame,
-    fetcher: HermeticFetcher,
-    by_host: bool = False,
-    host_salt: int = 32,
+    corpus: DataFrame | None,
+    fetcher,
     shuffle: bool = False,
     fingerprints: bool = False,
     proxies: DataFrame | None = None,
 ) -> DataFrame:
     """claimed frontier batch -> FETCH_RESULT_SCHEMA rows.
 
-    Default path: ``mapInPandas`` — the per-item state machine is row-
-    independent (politeness already enforced at claim time by the token
-    bucket), so no shuffle is needed at all and Zipf-head hosts can't
-    straggle a task. This is the 100 TB-correct plan: fetch parallelism ==
-    scan parallelism.
+    ``mapInPandas`` — the per-item state machine is row-independent
+    (politeness already enforced at claim time by the token bucket), so no
+    shuffle is needed at all and Zipf-head hosts can't straggle a task.
+    This is the 100 TB-correct plan: fetch parallelism == scan parallelism.
+    ``fetcher`` is anything with ``fetch_group(pdf) -> pdf``: the
+    hermetic replay or operators/netfetch.NetworkFetcher.
+
+    ``corpus``: the claim resolves against it (resolve_against_corpus);
+    ``None`` skips the resolve join — real URLs resolve over the wire, so
+    fetch parallelism == claim partitioning.
 
     ``shuffle=True``: claim-all batches — see resolve_against_corpus: the
     resolve join is hinted to a url-hash shuffle so the Python stage gets
     ROW-balanced partitions instead of the corpus scan's byte-balanced,
     row-skewed splits.
-
-    ``by_host=True``: groupBy(host, salt) + applyInPandas for fetchers that
-    hold per-host state (connection pools, per-host rate limiters — what the
-    reference's one-worker-per-batch layout gave it). The salt splits hot
-    hosts (SURVEY.md O8): without it the Zipf head becomes one giant group
-    and a single Python worker bottlenecks BOTH small and large clusters —
-    measured: fetch wall was dominated by the top host until salted.
     """
-    resolved = resolve_against_corpus(claimed, corpus, shuffle=shuffle)
+    if corpus is None:
+        resolved = claimed.select(
+            "url", "url_hash", "host", "retries",
+            F.lit(None).cast("timestamp").alias("warc_ts"),
+        )
+    else:
+        resolved = resolve_against_corpus(claimed, corpus, shuffle=shuffle)
     # Opt-in per-request context (the reference sets these per worker:
     # UA/Accept-Language at helpers.ts:28-52, proxy via the get_proxy hook
     # proxy.ts:124-150). Attached as deterministic JVM columns BEFORE the
@@ -260,14 +263,6 @@ def fetch_batch(
         from crawling_infrastructure_spark.operators.proxy import assign_proxies
 
         resolved = assign_proxies(resolved, proxies, key="url_hash")
-    if by_host:
-        salted = resolved.withColumn(
-            "_salt", F.pmod(F.col("url_hash"), F.lit(host_salt)).cast("int")
-        )
-        return salted.groupBy("host", "_salt").applyInPandas(
-            lambda pdf: fetcher.fetch_group(pdf.drop(columns=["_salt"])),
-            FETCH_RESULT_SCHEMA,
-        )
 
     def run(batches):
         for pdf in batches:

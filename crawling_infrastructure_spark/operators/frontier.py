@@ -191,22 +191,6 @@ def task_finished(frontier: DataFrame, max_retries: int, num_items: int | None =
     return (row["done"] or 0) + (row["dead"] or 0) >= total
 
 
-def progress_counts(frontier: DataFrame, now_expr: str, minutes: list[int]) -> DataFrame:
-    """A3 completedItemsNewerThan/getTaskProgress (queue.model.ts:172-199):
-    completed counts within trailing windows (reference uses 10m/60m/90m/12h)."""
-    aggs = [
-        F.sum(
-            F.when(
-                (F.col("status") == Status.COMPLETED)
-                & (F.col("crawled") > F.expr(f"{now_expr} - interval {m} minutes")),
-                1,
-            ).otherwise(0)
-        ).alias(f"completed_{m}m")
-        for m in minutes
-    ]
-    return frontier.agg(*aggs)
-
-
 def recent_completed(frontier: DataFrame, k: int) -> DataFrame:
     """W3 getRecentCompleted (queue.model.ts:201-207): sort -crawled limit k.
     Physical plan: TakeOrderedAndProject (distributed partial top-k, no full

@@ -47,17 +47,15 @@ def pagerank(
     damping: float = 0.85,
     src_col: str = "src",
     dst_col: str = "dst",
-    broadcast_ranks: bool = False,
 ) -> DataFrame:
     """(node, rank) after ``iters`` damped PageRank iterations over the
     DISTINCT edge set (parallel edges collapse — a page linking twice
     votes once, the host-graph convention). Self-loops are dropped.
     Nodes = every endpoint appearing in the edge table.
 
-    ``broadcast_ranks``: hint the (node, rank) side into the edge join —
-    correct when the node count is executor-memory bounded (e.g. a host
-    graph: 10^7 hosts x 16 B fits; a PAGE graph at 10^10 nodes does not,
-    leave it off and let the shuffle join partition both sides by src).
+    The (node, rank) side joins the edges unhinted: AQE broadcasts it when
+    its runtime size fits the threshold (a host graph: 10^7 hosts x 16 B)
+    and shuffles both sides by src otherwise (a page graph at 10^10 nodes).
     """
     e = (
         edges.select(F.col(src_col).alias("src"), F.col(dst_col).alias("dst"))
@@ -76,10 +74,9 @@ def pagerank(
     # in-engine half-up rounding (Python round() is banker's — not parity)
     ranks = nodes.select("node", F.round(F.lit(1.0 / n), 9).alias("rank"))
     for _ in range(iters):
-        r = F.broadcast(ranks) if broadcast_ranks else ranks
         contrib = (
             e.join(deg, "src")
-            .join(r, e.src == r.node)
+            .join(ranks, e.src == ranks.node)
             .select(F.col("dst").alias("node"), (F.col("rank") / F.col("deg")).alias("c"))
             .groupBy("node")
             .agg(F.sum("c").alias("in_mass"))

@@ -78,27 +78,3 @@ def lost_worker_candidates(worker_meta: DataFrame) -> DataFrame:
         & F.col("ended").isNull()
         & F.col("average_items_per_second").isNull()
     )
-
-
-def worker_meta_statistics(metrics: DataFrame) -> DataFrame:
-    """A7 getWorkerMetaStatistics (workermeta.model.ts:78-117): group counts,
-    averages, totals over all 'workers' (here: host-epoch groups)."""
-    return metrics.agg(
-        F.count("*").alias("num_workers"),
-        F.avg("failed").alias("avg_items_failed"),
-        F.avg("completed").alias("avg_items_crawled"),
-        F.avg("elapsed_ms").alias("avg_elapsed_ms"),
-        F.sum("bytes_fetched").alias("total_bytes_uploaded"),
-        F.avg("avg_items_per_second").alias("avg_items_per_second"),
-    )
-
-
-def progress_by_window(metrics: DataFrame) -> DataFrame:
-    """A3-style progress rollup per epoch (the reference's 10m/60m/90m/12h
-    trailing counts become per-epoch completed counts)."""
-    return metrics.groupBy("epoch").agg(
-        F.sum("completed").alias("completed"),
-        F.sum("failed").alias("failed"),
-        F.sum("blocked").alias("blocked"),
-        F.sum("bytes_fetched").alias("bytes"),
-    ).orderBy("epoch")

@@ -5,9 +5,10 @@ cookie jar, request_timeout default 15 s via config.ts:193, ``retry: 1``,
 proxy tunnel agent with a 25 s timeout floor at http_worker.ts:120-124),
 with outcome mapping from crawler/src/handler.ts:15-32 + 161-176.
 
-The Spark plan shape is fetcher-independent: ``fetch_batch_network`` is the
-same mapInPandas stage as operators/fetch.fetch_batch minus the corpus
-resolve join (real URLs resolve over the wire, not against a fixture). The
+The Spark plan shape is fetcher-independent: ``NetworkFetcher`` rides the
+same mapInPandas stage as the hermetic fetcher, through
+operators/fetch.fetch_batch with ``corpus=None`` (real URLs resolve over the
+wire, not against a fixture, so the resolve join is skipped). The
 output frame is FETCH_RESULT_SCHEMA, so merge_results / reenqueue_failed /
 metrics consume it unchanged — the whole state machine downstream of the
 socket is shared with the hermetic engine and its equivalence tests.
@@ -27,7 +28,6 @@ from dataclasses import dataclass, field
 from http.cookiejar import Cookie, CookieJar
 
 import pandas as pd
-from pyspark.sql import DataFrame
 
 from crawling_infrastructure_spark.functions.fingerprint import (
     ACCEPT_LOCALES,
@@ -37,7 +37,7 @@ from crawling_infrastructure_spark.operators.fetch import (
     BLOCKED_HTTP_CODES,
     CrawlFunction,
 )
-from crawling_infrastructure_spark.schema import FETCH_RESULT_SCHEMA, Status
+from crawling_infrastructure_spark.schema import Status
 
 #: got retries idempotent requests on these statuses (got@9 defaults, the
 #: version the reference pins); blocked codes are NOT among them — a block
@@ -221,43 +221,3 @@ class NetworkFetcher:
                 }
             out["browser_debug"].append(debug)
         return pd.DataFrame(out)
-
-
-def fetch_batch_network(
-    claimed: DataFrame,
-    fetcher: NetworkFetcher,
-    fingerprints: bool = False,
-    proxies: DataFrame | None = None,
-) -> DataFrame:
-    """claimed frontier batch -> FETCH_RESULT_SCHEMA rows over real sockets.
-
-    Identical plan to operators/fetch.fetch_batch minus the corpus resolve
-    join: request-context columns (fingerprints, per-row proxy) attach
-    JVM-side, then one Arrow-batched Python stage does the I/O. Fetch
-    parallelism == claim partitioning; no shuffle."""
-    from pyspark.sql import functions as F
-
-    resolved = claimed.select(
-        "url", "url_hash", "host", "retries",
-        F.lit(None).cast("timestamp").alias("warc_ts"),
-    )
-    if fingerprints:
-        from crawling_infrastructure_spark.functions.fingerprint import (
-            accept_language_header,
-            user_agent,
-        )
-
-        resolved = resolved.withColumn("ua", user_agent(F.col("url"))).withColumn(
-            "accept_language", accept_language_header(F.col("url"))
-        )
-    if proxies is not None:
-        from crawling_infrastructure_spark.operators.proxy import assign_proxies
-
-        resolved = assign_proxies(resolved, proxies, key="url_hash")
-
-    def run(batches):
-        for pdf in batches:
-            if len(pdf):
-                yield fetcher.fetch_group(pdf)
-
-    return resolved.mapInPandas(run, FETCH_RESULT_SCHEMA)

@@ -16,7 +16,6 @@ used by tests.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -58,14 +57,6 @@ class RobotsCache:
             if path.startswith(prefix):
                 return directive == "allow"
         return True
-
-    def allowed_series(self, hosts: pd.Series, urls: pd.Series) -> pd.Series:
-        paths = urls.str.replace(r"^https?://[^/]+", "", regex=True, case=False)
-        paths = paths.where(paths != "", "/")
-        return pd.Series(
-            [self.allowed(h, p) for h, p in zip(hosts, paths)], index=hosts.index
-        )
-
 
 def url_path_col(url_col):
     path = F.regexp_replace(url_col, r"(?i)^https?://[^/]+", "")

@@ -26,22 +26,26 @@ from pyspark.sql import functions as F
 _UNROLL_MAX_DIM = 256
 
 
-def _fixed_dim(df: DataFrame, vec_col: str) -> int | None:
-    """Uniform length of ``vec_col`` arrays, or None when ragged, empty,
-    all-null (size -1) or wider than _UNROLL_MAX_DIM — every None falls
-    back to the fold, which handles those inputs. One tiny min/max
-    aggregate job — the price of replacing the interpreted
-    higher-order fold with unrolled whole-stage-codegen arithmetic in every
-    pair expression (guide §1.2 'per-task work'). The unrolled chain is
-    bit-identical to the fold: same left-associated order, same float
-    multiply / double accumulate."""
+def _fixed_dim(df: DataFrame, vec_col: str) -> tuple[int | None, int]:
+    """(dim, n_bytes) of ``vec_col``. ``dim`` is the uniform array length,
+    or None when ragged, empty, all-null (size -1) or wider than
+    _UNROLL_MAX_DIM — every None falls back to the fold, which handles
+    those inputs. The unrolled chain is bit-identical to the fold: same
+    left-associated order, same float multiply / double accumulate.
+    ``n_bytes`` = rows x (max width x 4 + 16) sizes the frame as a pair-join
+    side for _fits_broadcast. One tiny min/max/count aggregate job — the
+    price of replacing the interpreted higher-order fold with unrolled
+    whole-stage-codegen arithmetic in every pair expression (guide §1.2
+    'per-task work'), and of a join strategy that follows the data."""
     row = df.agg(
         F.min(F.size(F.col(vec_col))).alias("lo"),
         F.max(F.size(F.col(vec_col))).alias("hi"),
+        F.count("*").alias("n"),
     ).first()
-    if row is None or row.lo is None or row.lo != row.hi:
-        return None
-    return int(row.lo) if 0 < row.lo <= _UNROLL_MAX_DIM else None
+    n_bytes = row.n * (max(row.hi or 0, 0) * 4 + 16)
+    if row.lo is None or row.lo != row.hi or not 0 < row.lo <= _UNROLL_MAX_DIM:
+        return None, n_bytes
+    return int(row.lo), n_bytes
 
 
 # Terms per Project operator in with_staged_dot. A single 64-term chain
@@ -114,9 +118,44 @@ def _parallelism(df: DataFrame) -> int:
     return df.sparkSession.sparkContext.defaultParallelism
 
 
-def cosine_topk_bruteforce(
-    queries: DataFrame, corpus: DataFrame, k: int = 5, broadcast_queries: bool = True
+def _fits_broadcast(spark, n_bytes: int) -> bool:
+    """The one join-strategy rule: a side of ``n_bytes`` broadcasts when it
+    fits Spark's own autoBroadcastJoinThreshold (the JVM accessor answers
+    bytes whatever units the conf was set in, and -1 when broadcast is
+    off). The size comes from a count the operator already runs, never
+    from Catalyst's estimate, which over-states exploded frames by many
+    orders of magnitude."""
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    return n_bytes <= limit
+
+
+def _pair_join(
+    a: DataFrame, b: DataFrame, key: str, id_a: str, n_bytes: int, widen_a: bool = True
 ) -> DataFrame:
+    """Equi-join of the two sides of a quadratic pair stage on ``key``
+    (the block / cell id). A plain key-shuffled join shuffles a few MB into
+    #keys partitions which AQE coalesces into ONE task whose join output
+    then explodes 10^3x (the exploding-join trap, guide §3.3), so:
+
+    - when ``b`` (``n_bytes``, the whole side: every key ships) fits the
+      broadcast threshold it broadcasts, and ``a`` is repartitioned by
+      ``id_a`` to the session parallelism (``widen_a``; skip it when ``a``
+      is already that wide) so the explosion runs on every core;
+    - otherwise (the 10^9-vector path) both sides shuffle on
+      (key, _salt): ``a`` rows take salt id mod p, ``b`` rows are
+      replicated once per salt, splitting each key's quadratic group
+      across p tasks."""
+    p = _parallelism(a)
+    if _fits_broadcast(a.sparkSession, n_bytes):
+        if widen_a:
+            a = a.repartition(p, id_a)
+        return a.join(F.broadcast(b), key)
+    a_s = a.withColumn("_salt", F.pmod(F.col(id_a), F.lit(p)))
+    b_s = b.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(p - 1))))
+    return a_s.join(b_s, [key, "_salt"]).drop("_salt")
+
+
+def cosine_topk_bruteforce(queries: DataFrame, corpus: DataFrame, k: int = 5) -> DataFrame:
     """Exact top-k by cosine. queries/corpus: (vec_id, embedding).
     Returns (query_id, neighbor_id, cosine, rank). The query side broadcasts
     (typical: thousands of probes vs billions of corpus vectors); per-query
@@ -129,7 +168,7 @@ def cosine_topk_bruteforce(
     the session parallelism so the pair explosion never runs in the scan's
     single input task (a one-row-group parquet file otherwise serializes
     the whole O(q x n) stage — guide §2.5 input skew)."""
-    dim = _fixed_dim(corpus, "embedding")
+    dim, _ = _fixed_dim(corpus, "embedding")
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("eq"),
@@ -140,9 +179,8 @@ def cosine_topk_bruteforce(
         F.col("embedding").alias("ec"),
         _norm_expr(F.col("embedding"), dim).alias("nc"),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-        c = c.repartition(_parallelism(corpus), "neighbor_id")
+    q = F.broadcast(q)
+    c = c.repartition(_parallelism(corpus), "neighbor_id")
     scored = with_staged_dot(
         c.crossJoin(q).filter(F.col("query_id") != F.col("neighbor_id")),
         "eq", "ec", "_dot", dim,
@@ -159,8 +197,7 @@ def cosine_topk_bruteforce(
 
 
 def cosine_topk_blocked(
-    queries: DataFrame, corpus: DataFrame, k: int = 5, block_col: str = "label",
-    broadcast_queries: bool = True,
+    queries: DataFrame, corpus: DataFrame, k: int = 5, block_col: str = "label"
 ) -> DataFrame:
     """IVF-bucketed variant: only same-block pairs score. The probe set is
     the small side (thousands of probes vs the corpus), so it broadcasts
@@ -168,9 +205,9 @@ def cosine_topk_blocked(
     map-side over corpus splits instead of shuffling both sides into a
     handful of block-keyed partitions whose tiny input bytes AQE coalesces
     into ONE task while the join output explodes 10^3x inside it (the
-    exploding-join trap, guide §3.3). ``broadcast_queries=False`` restores
-    the shuffle equi-join for probe sets too big to broadcast."""
-    dim = _fixed_dim(corpus, "embedding")
+    exploding-join trap, guide §3.3). The probe side always broadcasts:
+    the contract is thousands of probes."""
+    dim, _ = _fixed_dim(corpus, "embedding")
     q = queries.select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("eq"),
@@ -183,9 +220,8 @@ def cosine_topk_blocked(
         _norm_expr(F.col("embedding"), dim).alias("nc"),
         F.col(block_col).alias("blk"),
     )
-    if broadcast_queries:
-        q = F.broadcast(q)
-        c = c.repartition(_parallelism(corpus), "neighbor_id")
+    q = F.broadcast(q)
+    c = c.repartition(_parallelism(corpus), "neighbor_id")
     scored = with_staged_dot(
         c.join(q, "blk").filter(F.col("query_id") != F.col("neighbor_id")),
         "eq", "ec", "_dot", dim,
@@ -388,7 +424,6 @@ def semdedup(
     iters: int = 3,
     threshold: float = 0.35,
     vec_col: str = "embedding",
-    broadcast_pairs: bool = True,
 ) -> DataFrame:
     """SemDedup (Abbas et al. 2023, arXiv:2303.09540): semantic
     deduplication inside trained k-means cells — cluster the corpus with
@@ -409,17 +444,14 @@ def semdedup(
     rides a broadcast variable, and the output is one row per vector with
     no embedding column, so nothing downstream carries vectors.
 
-    ``broadcast_pairs`` picks the pair-join strategy: True broadcasts the
-    neighbor side (right only when the WHOLE vector side fits in executor
-    memory: the broadcast ships every cell, and the explicit hint bypasses
-    autoBroadcastJoinThreshold); False is
-    the 10^9-vector path — a salted shuffle equi-join on (cell, salt)
-    that splits each cell's quadratic pair group across ``_parallelism``
-    tasks, because a plain cell-keyed shuffle both bottlenecks on
-    #cells partitions and invites AQE to coalesce the tiny input bytes
-    into one task while the join OUTPUT explodes inside it."""
+    Pair strategy (``_pair_join``): the neighbor side broadcasts when the
+    whole vector side (rows x (dim x 4 + 16) bytes, from the same aggregate
+    that fixes ``dim``) fits the session's autoBroadcastJoinThreshold;
+    otherwise a salted shuffle equi-join on (cell, salt) splits each cell's
+    quadratic pair group across ``_parallelism`` tasks — the 10^9-vector
+    path."""
     centroids = kmeans_train(emb, k, iters, vec_col)
-    dim = _fixed_dim(emb, vec_col)
+    dim, n_bytes = _fixed_dim(emb, vec_col)
     cells = with_cell(
         emb.select("vec_id", vec_col), centroids, vec_col=vec_col, out="cell",
         widen=True,
@@ -438,18 +470,11 @@ def semdedup(
     b = cells.select(
         F.col("vec_id").alias("other"), F.col(vec_col).alias("eb"), F.col("_n").alias("nb"), "cell"
     )
-    # pair stage: broadcast one side, keep the other partitioned wide (the
-    # checkpoint preserves the widened assignment partitioning), so the
-    # O(n^2 / cells) explosion runs on every core instead of inside the
-    # coalesced single partition a cells-keyed shuffle degenerates to
-    # (exploding-join trap, guide §3.3)
-    if broadcast_pairs:
-        pairs = a.join(F.broadcast(b), "cell")
-    else:
-        s = _parallelism(emb)
-        a_s = a.withColumn("_salt", F.pmod(F.col("vec_id"), F.lit(s)))
-        b_s = b.withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(s - 1))))
-        pairs = a_s.join(b_s, ["cell", "_salt"]).drop("_salt")
+    # pair stage: the broadcast form keeps ``a`` as the checkpoint left it
+    # (already widened by the assignment), so the O(n^2 / cells) explosion
+    # runs on every core instead of inside the coalesced single partition
+    # a cells-keyed shuffle degenerates to (exploding-join trap, guide §3.3)
+    pairs = _pair_join(a, b, "cell", "vec_id", n_bytes, widen_a=False)
     close = (
         with_staged_dot(pairs.filter(F.col("other") < F.col("vec_id")), "ea", "eb", "_dot", dim)
         .filter(

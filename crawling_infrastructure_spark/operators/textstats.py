@@ -245,7 +245,6 @@ def lm_score(
     vocab_size: int = 256,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """CCNet-style language-model quality scoring (Wenzek et al. 2020):
     train an add-one-smoothed bigram LM on the corpus itself (vocabulary
@@ -280,9 +279,10 @@ def lm_score(
     stream pass. An earlier form localCheckpointed the mapped stream —
     an O(total-corpus-tokens) executor-disk write that contradicted the
     100 TB shape and cost more than the recompute it saved.
-    ``broadcast_model=False`` degrades every broadcast here (vocab map +
-    logprob probe) to shuffle joins for vocabularies too big to broadcast
-    (the same switch as contamination's broadcast_eval).
+    Join strategy: the model is at most (V+1)^2 rows of 48 B (Spark's
+    size for two strings and a double); when that fits the session's
+    autoBroadcastJoinThreshold the vocab map is a driver-side set probe
+    and the logprob probe broadcasts, otherwise both are shuffle joins.
 
     Determinism: the vocab top-V is totally ordered (count desc, token
     asc), and each bigram log-prob is rounded half-up to 9 decimals
@@ -290,7 +290,10 @@ def lm_score(
     (~1e-16) snaps to engine-independent values (same device as
     linkrank.pagerank); the published average rounds to 4.
     """
-    from crawling_infrastructure_spark.operators.similarity import _parallelism
+    from crawling_infrastructure_spark.operators.similarity import (
+        _fits_broadcast,
+        _parallelism,
+    )
 
     # widen the scan: the fixture parquet is one row group -> one split,
     # which would serialize every explode/aggregate pass below; the text
@@ -309,13 +312,14 @@ def lm_score(
         .limit(vocab_size)
         .select(F.col("gram").alias("_v"))
     )
-    # With the broadcastable cap, pull the vocab to the driver ONCE (V
+    # With a broadcastable model, pull the vocab to the driver ONCE (V
     # strings — model state, same class as k-means centroids) and map
     # tokens with a codegen'd set probe: re-deriving it per join side
     # would re-run the unigram aggregate once per broadcast (4x). The
     # shuffle-join path keeps the vocab distributed.
+    model_fits = _fits_broadcast(docs.sparkSession, (vocab_size + 1) ** 2 * 48)
     vocab_set: list[str] | None = None
-    if broadcast_model:
+    if model_fits:
         vocab_set = [r._v for r in vocab.collect()]
 
     def to_vocab(col):
@@ -335,7 +339,7 @@ def lm_score(
             F.element_at(F.col("_t"), F.col("_i")).alias("w1"),
             F.element_at(F.col("_t"), F.col("_i") + 1).alias("w2"),
         )
-        if broadcast_model:
+        if model_fits:
             return bi.select(
                 "doc_id",
                 to_vocab(F.col("w1")).alias("mw1"),
@@ -362,7 +366,7 @@ def lm_score(
         F.log((F.col("c12") + F.lit(1.0)) / (F.col("c1") + F.lit(denom_add))), 9
     )
     lp_table = model.join(ctx, "mw1").select("mw1", "mw2", lp.alias("_lp"))
-    if broadcast_model:
+    if model_fits:
         lp_table = F.broadcast(lp_table)
     scored = mapped_bigrams().join(lp_table, ["mw1", "mw2"])
     return scored.groupBy("doc_id").agg(

@@ -193,20 +193,3 @@ def seed_urls(n_hosts: int) -> list[str]:
         if k % 100 == 23:
             out.append("")  # empty line
     return out
-
-
-SCALES = {
-    "tiny": dict(n_pages=1_000, n_hosts=10),
-    "small": dict(n_pages=50_000, n_hosts=100),
-    "bench": dict(n_pages=500_000, n_hosts=1_000),
-}
-
-
-def write_fixture(spark: SparkSession, out_dir: str, scale: str = "tiny") -> dict:
-    cfg = SCALES[scale]
-    pages = gen_pages(spark, **cfg)
-    pages.write.mode("overwrite").parquet(f"{out_dir}/pages.parquet")
-    seeds = seed_urls(cfg["n_hosts"])
-    with open(f"{out_dir}/seeds.txt", "w") as f:
-        f.write("\n".join(seeds) + "\n")
-    return cfg

@@ -18,6 +18,35 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def broadcast_threshold(spark):
+    """Setter for spark.sql.autoBroadcastJoinThreshold, restored after the
+    test: the size rule (similarity._fits_broadcast) reads it, so a test
+    moves the size-chosen joins onto their shuffle path with -1."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    yield lambda value: spark.conf.set(key, str(value))
+    spark.conf.set(key, old)
+
+
+@pytest.fixture
+def no_broadcast(broadcast_threshold):
+    """Broadcast off for the whole test: every size-chosen join shuffles."""
+    broadcast_threshold(-1)
+
+
+@pytest.fixture(scope="session")
+def emb(spark):
+    """40 uniform-width (24-dim) float vectors in 3 labels."""
+    rows = [
+        (i, [((i * 7 + j * 13) % 29 - 14) / 7.0 for j in range(24)], i % 3)
+        for i in range(40)
+    ]
+    return spark.createDataFrame(
+        rows, "vec_id long, embedding array<float>, label int"
+    )
+
+
 @pytest.fixture(scope="session")
 def corpus(spark):
     df = gen_pages(spark, N_PAGES, N_HOSTS).cache()

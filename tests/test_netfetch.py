@@ -1,6 +1,7 @@
 """NetworkFetcher against a loopback ThreadingHTTPServer — the reference's
 HTTP worker config surface (crawler/src/http_worker.ts:70-129) exercised
-through the real Spark mapInPandas plumbing, never the internet:
+through the real Spark mapInPandas plumbing (``fetch_batch`` with no
+corpus), never the internet:
 timeout -> retry -> fail, 5xx -> retry -> success, blocked codes consume no
 retry AND no retry-request, headers/cookies reach the wire."""
 
@@ -11,10 +12,10 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pytest
 from pyspark.sql import functions as F
 
+from crawling_infrastructure_spark.operators.fetch import fetch_batch
 from crawling_infrastructure_spark.operators.netfetch import (
     HttpFetchConfig,
     NetworkFetcher,
-    fetch_batch_network,
 )
 from crawling_infrastructure_spark.schema import Status
 
@@ -83,7 +84,7 @@ def test_state_machine_over_real_sockets(spark, server):
     claimed = _claimed(spark, server, ["/ok", "/blocked", "/flaky", "/slow", "/gone"])
     out = {
         r.url.rsplit("/", 1)[-1]: r
-        for r in fetch_batch_network(claimed, fetcher).collect()
+        for r in fetch_batch(claimed, None, fetcher).collect()
     }
     # success: extracted text + outlinks, completed consumes a retry slot
     assert out["ok"].status == Status.COMPLETED and out["ok"].retries_delta == 1
@@ -108,6 +109,15 @@ def test_state_machine_over_real_sockets(spark, server):
     assert HITS["/gone"] == 1
 
 
+def test_no_corpus_skips_the_resolve_join(spark):
+    # real URLs resolve over the wire: the plan is the claim scan straight
+    # into the Python stage, no join against a corpus
+    claimed = _claimed(spark, "http://127.0.0.1:9", ["/a"])
+    plan = fetch_batch(claimed, None, NetworkFetcher())._jdf.queryExecution()
+    text = plan.executedPlan().toString()
+    assert "MapInPandas" in text and "Join" not in text
+
+
 def test_headers_and_cookies_reach_the_wire(spark, server):
     cfg = HttpFetchConfig(
         user_agent="parity-test-UA/1.0",
@@ -117,7 +127,7 @@ def test_headers_and_cookies_reach_the_wire(spark, server):
     )
     fetcher = NetworkFetcher(config=cfg)
     claimed = _claimed(spark, server, ["/hdr"])
-    row = fetch_batch_network(claimed, fetcher).collect()[0]
+    row = fetch_batch(claimed, None, fetcher).collect()[0]
     assert "ua=parity-test-UA/1.0" in row.text
     assert "lang=xx-TEST" in row.text  # user headers merged last (ts:97-99)
     assert "cookie=sid=42" in row.text  # jar seeded from config.cookies
@@ -129,7 +139,7 @@ def test_fingerprint_columns_override_config(spark, server):
     # per-worker setup()
     fetcher = NetworkFetcher(config=HttpFetchConfig(request_timeout=2000.0))
     claimed = _claimed(spark, server, ["/fp"])
-    row = fetch_batch_network(claimed, fetcher, fingerprints=True).collect()[0]
+    row = fetch_batch(claimed, None, fetcher, fingerprints=True).collect()[0]
     assert "ua=Mozilla/5.0" in row.text
     assert "lang=" in row.text and "q=0.7" in row.text
 

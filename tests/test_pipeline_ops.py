@@ -1,6 +1,8 @@
 """Training-data pipeline operators: dedup sketches, similarity, multimodal.
-The oracle-paired ops are covered by tools/check_oracle.py + the driver;
-these tests cover the rows-only sketch ops' semantic guarantees."""
+The oracle-paired queries are checked in tests/test_oracle.py; these tests
+cover the sketch ops' semantic guarantees and pin each physical rewrite
+(unrolled dot products, hashed shingle streams, occurrence-stream minhash,
+join-then-distinct contamination) to the formulation it replaced."""
 
 import numpy as np
 import pytest
@@ -8,10 +10,13 @@ from pyspark.sql import functions as F
 
 from crawling_infrastructure_spark.operators.dedup import (
     exact_dedup,
+    hashed_shingle_stream,
+    md5_prefix_hash_col,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     simhash_fingerprints,
     simhash_neardup_pairs,
+    word_shingles,
 )
 from crawling_infrastructure_spark.operators.multimodal import (
     decode_media,
@@ -21,8 +26,11 @@ from crawling_infrastructure_spark.operators.multimodal import (
     sniff_format,
 )
 from crawling_infrastructure_spark.operators.similarity import (
+    _fixed_dim,
+    _norm_expr,
     cosine_topk_blocked,
     cosine_topk_bruteforce,
+    with_staged_dot,
 )
 
 
@@ -172,3 +180,131 @@ def test_resize_media_plumbing(spark):
     # the fake decoder honors the (height, width) contract a real one has
     img = fake_decode_image(b"\x09", 5, 4)
     assert img.shape == (4, 5) and img.dtype.name == "uint8"
+
+
+def test_staged_dot_bit_identical_to_fold(emb):
+    dim, n_bytes = _fixed_dim(emb, "embedding")
+    assert dim == 24
+    assert n_bytes == 40 * (24 * 4 + 16)  # rows x (width x 4 + 16)
+    pairs = (
+        emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
+        .crossJoin(
+            emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
+        )
+        .filter(F.col("ia") < F.col("ib"))
+    )
+    fold = F.aggregate(
+        F.zip_with(F.col("ea"), F.col("eb"), lambda x, y: x * y),
+        F.lit(0.0),
+        lambda a, x: a + x,
+    )
+    got = (
+        with_staged_dot(pairs, "ea", "eb", "_dot", dim)
+        .withColumn("_fold", fold)
+        .filter(F.col("_dot") != F.col("_fold"))
+        .count()
+    )
+    # bit-identical, not approximately equal: same ops in the same order
+    assert got == 0
+
+
+@pytest.mark.parametrize(
+    "rows, dot",
+    [
+        ([(i, []) for i in range(4)], 0.0),     # uniformly empty vectors
+        ([(i, None) for i in range(4)], None),  # all-null vector column
+    ],
+    ids=["empty", "all_null"],
+)
+def test_fixed_dim_degenerate_vectors_fall_back_to_fold(spark, rows, dot):
+    """Neither input has a positive uniform width, so _fixed_dim must
+    return None and with_staged_dot take the fold; a width of 0 or -1 once
+    skipped the _dot column (UNRESOLVED_COLUMN on the first use)."""
+    vecs = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    dim, n_bytes = _fixed_dim(vecs, "embedding")
+    assert dim is None
+    assert n_bytes == 4 * 16  # no vector width: 16 B of row per vector
+    pairs = vecs.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea")).crossJoin(
+        vecs.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
+    )
+    got = with_staged_dot(pairs, "ea", "eb", "_dot", dim).select("_dot").collect()
+    assert [r._dot for r in got] == [dot] * 16
+
+
+def test_norm_expr_bit_identical_to_fold(emb):
+    dim, _ = _fixed_dim(emb, "embedding")
+    fold = F.sqrt(
+        F.aggregate(F.col("embedding"), F.lit(0.0), lambda a, x: a + x * x)
+    )
+    got = (
+        emb.select(_norm_expr(F.col("embedding"), dim).alias("a"), fold.alias("b"))
+        .filter(F.col("a") != F.col("b"))
+        .count()
+    )
+    assert got == 0
+
+
+@pytest.fixture(scope="module")
+def shingle_docs(spark):
+    texts = [
+        "the quick brown fox jumps over the lazy dog again and again",
+        "the quick brown fox jumps over the lazy dog",
+        "lorem ipsum dolor sit amet consectetur adipiscing elit sed do",
+        "a b a b a b a b a b a b",
+        "short",
+        "",
+        "double  space  tokens  here  double  space  tokens  here",
+    ]
+    return spark.createDataFrame(
+        [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
+    )
+
+
+def test_hashed_shingle_stream_matches_word_shingles(shingle_docs):
+    for n in (2, 3, 8):
+        via_strings = (
+            word_shingles(shingle_docs, n)
+            .select("doc_id", md5_prefix_hash_col(F.col("shingle"), None).alias("wh"))
+        )
+        via_stream = hashed_shingle_stream(shingle_docs, n, distinct=True)
+        assert via_strings.exceptAll(via_stream).count() == 0
+        assert via_stream.exceptAll(via_strings).count() == 0
+
+
+def test_minhash_signature_multiset_invariance(shingle_docs):
+    # min() over the occurrence stream == min() over the distinct set: the
+    # optimized signatures (no per-doc distinct) must equal a reference
+    # aggregation over word_shingles' DISTINCT pairs with the same coeffs
+    from crawling_infrastructure_spark.operators.dedup import (
+        MINHASH_P,
+        minhash_coeffs,
+        minhash_signatures,
+    )
+
+    num_perm, seed, n = 4, 42, 3
+    got = minhash_signatures(shingle_docs, num_perm, n, seed)
+    a, b = minhash_coeffs(num_perm, seed)
+    hashed = word_shingles(shingle_docs, n).select(
+        "doc_id", md5_prefix_hash_col(F.col("shingle")).alias("h")
+    )
+    want = hashed.groupBy("doc_id").agg(*[
+        F.min((F.lit(a[j]) * F.col("h") + F.lit(b[j])) % F.lit(MINHASH_P)).alias(f"m{j}")
+        for j in range(num_perm)
+    ])
+    assert got.exceptAll(want).count() == 0
+    assert want.exceptAll(got).count() == 0
+
+
+def test_contamination_join_then_distinct(spark):
+    # a training doc repeating a contaminated window many times must count
+    # it ONCE (per-doc distinct semantics survive the join-first rewrite)
+    from crawling_infrastructure_spark.operators.corpus import contamination
+
+    tr = spark.createDataFrame(
+        [(1, "a b c d a b c d a b c d"), (2, "x y z w")],
+        "doc_id long, text string",
+    )
+    ev = spark.createDataFrame([(9, "a b c d")], "doc_id long, text string")
+    got = {r.doc_id: r.n_eval_windows
+           for r in contamination(tr, ev, window=4).collect()}
+    assert got == {1: 1}

@@ -9,6 +9,8 @@ operators that declare it.
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -45,8 +47,6 @@ def test_scans_prune_columns(spark):
         "token_counts": {"doc_id", "text"},
         "fingerprint": {"doc_id", "text"},
     }
-    import re
-
     for name, allowed in cases.items():
         plan = _plan(spark, name)
         m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
@@ -58,7 +58,6 @@ def test_scans_prune_columns(spark):
 def test_filters_push_to_scan(spark):
     # a raw-column predicate must reach the parquet reader as a pushed
     # filter; top_revenue_orders filters stored lineitem/orders columns
-    import re
     from pyspark.sql import functions as F
     from crawling_infrastructure_spark.plans.queries import _t
 
@@ -99,3 +98,28 @@ def test_media_features_metadata_only_prunes_python(spark):
     df = QUERIES["media_features"](spark, SF_DIR).select("media_id", "n_bytes")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "ArrowEvalPython" not in plan and "MapInPandas" not in plan
+
+
+# The joins whose strategy a size rule picks (similarity._fits_broadcast):
+# at sf0.001 every side fits the session threshold; with it at -1 the pair
+# joins take the salted (key, _salt) shuffle and lm_score broadcasts nothing.
+PAIR_JOINS = {"embedding_neardup": "blk", "semdedup": "cell"}
+
+
+@pytest.mark.parametrize("name", [*PAIR_JOINS, "lm_score"])
+def test_size_rule_broadcasts_small_sides(spark, name):
+    plan = _plan(spark, name)
+    assert "BroadcastExchange" in plan
+    if name in PAIR_JOINS:
+        assert re.search(rf"BroadcastHashJoin \[{PAIR_JOINS[name]}#", plan)
+
+
+@pytest.mark.parametrize("name", [*PAIR_JOINS, "lm_score"])
+def test_size_rule_shuffles_when_broadcast_is_off(spark, no_broadcast, name):
+    plan = _plan(spark, name)
+    if name in PAIR_JOINS:
+        assert re.search(
+            rf"(SortMergeJoin|ShuffledHashJoin) \[{PAIR_JOINS[name]}#\d+, _salt#", plan
+        )
+    else:
+        assert "BroadcastExchange" not in plan

@@ -17,14 +17,13 @@ boundary where the two engines could round apart.
 
 from __future__ import annotations
 
-import hashlib
-
 import duckdb
 import numpy as np
 import pandas as pd
 import pytest
 
 from crawling_infrastructure_spark.plans.queries import ORACLE_SQL, QUERIES
+from tests.oracle_compare import assert_same_rows
 
 ZERO_IDS = {3, 7, 25, 31}
 NULL_IDS = {13, 34}  # past the first 8 rows, semdedup's initial centroids
@@ -57,16 +56,6 @@ def zero_sf(tmp_path_factory):
     return str(sf)
 
 
-def _digest(df: pd.DataFrame) -> str:
-    """Order-insensitive hash of a result: columns sorted by name, floats
-    rounded to 6 places, rows sorted."""
-    df = df[sorted(df.columns)].copy()
-    for c in df.columns:
-        df[c] = df[c].astype("float64").round(6)
-    lines = sorted(",".join(repr(x) for x in r) for r in df.itertuples(index=False))
-    return hashlib.sha256("\n".join(lines).encode()).hexdigest()
-
-
 @pytest.mark.parametrize("name", COSINE_QUERIES)
 def test_zero_norm_vectors_match_oracle(spark, zero_sf, name):
     got = QUERIES[name](spark, zero_sf).toPandas()
@@ -82,5 +71,4 @@ def test_zero_norm_vectors_match_oracle(spark, zero_sf, name):
         con.execute(f"CREATE VIEW embeddings AS {src}")
     want = con.execute(ORACLE_SQL[name]).df()
     assert len(got) > 0
-    assert len(got) == len(want)
-    assert _digest(got) == _digest(want)
+    assert_same_rows(got, want)
