@@ -30,9 +30,14 @@ same contract over plain Parquet with an atomic-rename manifest:
   the epoch driver is the single writer, so this is race-free by
   construction — exactly the property the reference lacked and papered over
   with heartbeat healing (master/doc/QueueArch.md, workermeta.model.ts:125-203)
-- every version can carry a ``tag`` (we tag ``epoch-K``); ``rollback`` makes
-  an old version current again → kill-and-resume recovers the exact frontier
-  (replaces the reference's U4/U7/U8 queue-healing machinery, SURVEY.md §2.6)
+- every version can carry a ``tag`` (we tag ``epoch-K``) and a small
+  ``meta`` dict the writer names (the crawl job records which frontier
+  version a seen version covers), and names its ``parent``: the version
+  current when it was written (Iceberg's parent-snapshot-id), so
+  ``lineage`` walks a version's history across rollbacks. ``rollback``
+  makes an old version current again → kill-and-resume recovers the exact
+  frontier (replaces the reference's U4/U7/U8 queue-healing machinery,
+  SURVEY.md §2.6)
 
 On a real cluster swap this file for ``spark.table("catalog.db.frontier")``
 + Iceberg MERGE INTO; the operator code only touches the Table API below.
@@ -161,6 +166,27 @@ class Table:
     def _current_dirs(self) -> list[str]:
         return [d for dirs in self._current_buckets().values() for d in dirs]
 
+    def head(self) -> dict | None:
+        """The current version's manifest entry (None before any commit)."""
+        return self._current(self._load())
+
+    def lineage(self) -> list[dict]:
+        """The current version, its parent, its parent's parent, ...: the
+        history the current state was built on, newest first. Versions a
+        rollback left behind are not on it. The walk stops at a version
+        snapshot expiry removed."""
+        m = self._load()
+        by_id = {v["version"]: v for v in m["versions"]}
+        # a version written before versions named their parent counts the
+        # one listed before it as its parent: right unless a hand rollback
+        # preceded it (resume rolled back only the append tables then)
+        prior = {b["version"]: a["version"] for a, b in zip(m["versions"], m["versions"][1:])}
+        out, v = [], by_id.get(m["current"])
+        while v is not None:
+            out.append(v)
+            v = by_id.get(v.get("parent", prior.get(v["version"])))
+        return out
+
     # -- data -------------------------------------------------------------
     def _bucket_col(self, key: str | None = None):
         return F.pmod(F.col(key or self.key), F.lit(self.n_buckets)).cast("int")
@@ -207,13 +233,14 @@ class Table:
         drop: Iterable[str],
         tag: str | None,
         n_parts: int | None = None,
+        meta: dict | None = None,
     ) -> int:
         """The one write primitive: write ``df`` as one new data dir (one
         subdir per bucket with rows) and commit a version naming the
         current dirs minus ``drop`` plus the new subdirs; a bucket left
         with no dirs is dropped. With ``stat_col`` set, the written dirs'
         value sets come from an Observation on this very write job and the
-        carried dirs keep theirs."""
+        carried dirs keep theirs. ``meta`` rides the version entry."""
         m = self._load()
         version = self._next_version(m)
         d = os.path.join(self.dir, f"v_{version:08d}_{uuid.uuid4().hex[:8]}")
@@ -231,7 +258,7 @@ class Table:
                 buckets[b] = kept
         for b, p in written.items():
             buckets.setdefault(b, []).append(p)
-        entry: dict = {"version": version, "buckets": buckets, "tag": tag}
+        entry = self._entry(m, version, buckets, tag, meta)
         if obs is not None:
             seen: dict[str, set] = {}
             # a bucketed write of no rows has no metrics to read: AQE drops
@@ -243,29 +270,52 @@ class Table:
             entry["dir_values"] = {
                 p: values[p] for dirs in buckets.values() for p in dirs if p in values
             }
+        return self._append_version(m, entry)
+
+    @staticmethod
+    def _entry(m: dict, version: int, buckets: dict, tag: str | None, meta: dict | None) -> dict:
+        entry = {"version": version, "buckets": buckets, "tag": tag, "parent": m["current"]}
+        if meta:
+            entry["meta"] = meta
+        return entry
+
+    def _append_version(self, m: dict, entry: dict) -> int:
         m["versions"].append(entry)
-        m["current"] = version
+        m["current"] = entry["version"]
         m["n_buckets"] = self.n_buckets  # layout is immutable once data exists
         self._commit(m)
-        return version
+        return entry["version"]
 
-    def write_full(self, df: DataFrame, tag: str | None = None) -> int:
+    def write_full(self, df: DataFrame, tag: str | None = None, meta: dict | None = None) -> int:
         """Overwrite snapshot (the Parquet stand-in for Iceberg MERGE INTO /
         overwritePartitions): the new version references only df's dirs."""
-        return self._write(df, self._current_dirs(), tag)
+        return self._write(df, self._current_dirs(), tag, meta=meta)
 
     def append(self, df: DataFrame, tag: str | None = None) -> int:
         """Append snapshot: O(new data), each bucket receiving rows gains
         one dir, no existing dir is rewritten."""
         return self._write(df, (), tag)
 
-    def merge_buckets(self, df: DataFrame, dirty: list[int], tag: str | None = None) -> int:
+    def merge_buckets(
+        self, df: DataFrame, dirty: list[int], tag: str | None = None, meta: dict | None = None
+    ) -> int:
         """Replace the content of the ``dirty`` buckets with df's rows in
         them; df's rows in other buckets are appended. Untouched buckets
         are carried over by reference: O(touched buckets)."""
         cur = self._current_buckets()
         drop = [p for b in dirty for p in cur.get(str(b), [])]
-        return self._write(df, drop, tag, n_parts=max(1, len(dirty)))
+        return self._write(df, drop, tag, n_parts=max(1, len(dirty)), meta=meta)
+
+    def stamp(self, tag: str | None, meta: dict | None = None) -> int:
+        """Commit a version whose data is the current version's, by
+        reference, with a new ``tag`` and ``meta``: a manifest write, zero
+        Spark jobs."""
+        m = self._load()
+        cur = self._current(m) or {}
+        entry = self._entry(m, self._next_version(m), cur.get("buckets", {}), tag, meta)
+        if "dir_values" in cur:
+            entry["dir_values"] = cur["dir_values"]
+        return self._append_version(m, entry)
 
     def buckets_with(self, value) -> list[int]:
         """Buckets of the CURRENT version whose rows may hold ``stat_col ==
@@ -305,6 +355,17 @@ class Table:
         cur = self._current_buckets()
         return self._read_dirs(spark, [d for b in bucket_ids for d in cur.get(str(b), [])], schema)
 
+    def read_since(
+        self, spark: SparkSession, version: int, schema: T.StructType | None = None
+    ) -> DataFrame:
+        """The rows of the data dirs the current version references and
+        ``version`` did not. For an ancestor ``version`` (see ``lineage``)
+        that is every row written since, plus rewritten copies of older
+        rows."""
+        old = next(v for v in self._load()["versions"] if v["version"] == version)
+        known = set(self._version_dirs(old))
+        return self._read_dirs(spark, [d for d in self._current_dirs() if d not in known], schema)
+
     def read_version(self, spark: SparkSession, version: int) -> DataFrame:
         for v in self._load()["versions"]:
             if v["version"] == version:
@@ -321,7 +382,10 @@ class Table:
         self._commit(m)
 
     def expire_snapshots(self, keep_last: int = 5) -> None:
-        """GC old versions' unreferenced dirs (Iceberg expire_snapshots)."""
+        """GC old versions' unreferenced dirs (Iceberg expire_snapshots).
+        The shorter manifest commits BEFORE any dir is deleted: a crash
+        between the two leaves only unreferenced dirs, which the next call
+        removes, never a version naming a deleted dir."""
         m = self._load()
         if len(m["versions"]) <= keep_last:
             return
@@ -329,6 +393,9 @@ class Table:
         if m["current"] not in [v["version"] for v in keep]:
             keep = [v for v in m["versions"] if v["version"] == m["current"]] + keep
         referenced = {d for v in keep for d in self._version_dirs(v)}
+        expired = {d for v in m["versions"] for d in self._version_dirs(v)} - referenced
+        m["versions"] = keep
+        self._commit(m)
         # a data root no kept version references into is garbage: a dir only
         # expired versions named, a write that died before its commit, or
         # the empty shell of a root whose bucket subdirs (<root>/v_x/_bkt=3)
@@ -339,10 +406,8 @@ class Table:
                 d == root or d.startswith(root + os.sep) for d in referenced
             ):
                 shutil.rmtree(root, ignore_errors=True)
-        for d in {d for v in m["versions"] for d in self._version_dirs(v)} - referenced:
+        for d in expired:
             shutil.rmtree(d, ignore_errors=True)
-        m["versions"] = keep
-        self._commit(m)
 
     # -- maintenance --------------------------------------------------------
     @staticmethod

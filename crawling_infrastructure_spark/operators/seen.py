@@ -30,8 +30,11 @@ buckets) of state; the hash array costs 8 B/key (~80 GB total at 10^10,
 ~5 MB/bucket at 16k buckets — one comfortable Arrow batch), and only
 buckets receiving candidates are ever deserialized. Net semantics: EXACT —
 identical to the old frontier anti-join because the seen set is maintained
-in lockstep with frontier admission (built from the full frontier at
-init_task/resume, folded with every admitted batch).
+in lockstep with frontier admission: built from the seed frontier at
+init_task, folded with every admitted batch, and each seen commit names the
+frontier version it covers, so a resume after a kill between the two
+commits folds in only the frontier dirs written since that version
+(plans/epoch.CrawlJob._repair_seen); the full build_seen is its fallback.
 
 Bloom sizing (round-3 stretch item): every fold re-sizes the bucket's
 bloom from the MERGED exact count instead of a fixed 1<<16 floor, so a

@@ -312,15 +312,18 @@ def lm_score(
         .limit(vocab_size)
         .select(F.col("gram").alias("_v"))
     )
-    # With a broadcastable model, pull the vocab to the driver ONCE (V
-    # strings — model state, same class as k-means centroids) and map
-    # tokens with a codegen'd set probe: re-deriving it per join side
-    # would re-run the unigram aggregate once per broadcast (4x). The
-    # shuffle-join path keeps the vocab distributed.
+    # The vocab is computed ONCE either way (V strings — model state, same
+    # class as k-means centroids): each mapped_bigrams() call maps both
+    # bigram words and there are two calls, so a vocab left as a plan would
+    # re-run the unigram aggregate 4x. With a broadcastable model it goes
+    # to the driver and tokens map with a codegen'd set probe; on the
+    # shuffle-join path it stays distributed as a V-row checkpoint.
     model_fits = _fits_broadcast(docs.sparkSession, (vocab_size + 1) ** 2 * 48)
     vocab_set: list[str] | None = None
     if model_fits:
         vocab_set = [r._v for r in vocab.collect()]
+    else:
+        vocab = vocab.localCheckpoint()
 
     def to_vocab(col):
         if not vocab_set:

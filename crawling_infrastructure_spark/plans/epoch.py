@@ -27,7 +27,8 @@ One epoch =
               fold in one cogroup per seen bucket, cached once) -> new
               initial rows, written by the step-4 merge; their count and
               the seen buckets to fold ride an Observation on that write,
-              and the folded seen shards commit right after the frontier
+              and the folded seen shards commit right after the frontier,
+              naming the frontier version they cover
   6. metrics  per-host lineage rows (worker_meta analogue)
   7. tag      snapshot 'epoch-K' on every table — the checkpoint
 
@@ -40,6 +41,16 @@ Kill the driver at ANY point: resume() rolls the per-epoch append tables
 back to the last completed epoch, heals running->initial (U4) from the
 last committed snapshots and re-runs the epoch. Single-writer + atomic
 manifest commit = the race-free version of the reference's heartbeat healing.
+
+The seen set's lag behind the frontier is a fact in the catalog, not a
+guess: every seen commit records the frontier version whose url_hash set
+it covers, and a frontier commit that cannot add url_hashes (the claim
+snapshot, the heal, reenqueue) records the version whose set it keeps.
+So resume() repairs only the lag a kill left — the frontier dirs written
+since the covered version — and after a clean stop it launches no Spark
+job at all; the O(frontier) build_seen runs only when no coverage is known
+(a kill inside init_task, a catalog written before coverage was recorded,
+or a covered version that snapshot expiry removed).
 """
 
 from __future__ import annotations
@@ -89,6 +100,24 @@ from crawling_infrastructure_spark.operators.seen import (
     seen_shards,
 )
 from crawling_infrastructure_spark.schema import FRONTIER_SCHEMA, SEEN_SCHEMA, Status
+
+
+def _epoch_of(tag: str | None) -> int | None:
+    """K of an exact ``epoch-K`` tag: the frontier's checkpoint of a
+    completed epoch (``epoch-K-claim`` is only a claim, ``epoch-K-compact``
+    an epoch's snapshot GC)."""
+    m = re.fullmatch(r"epoch-(\d+)", tag or "")
+    return int(m.group(1)) if m else None
+
+
+def _completed_epoch(lineage: list[dict]) -> int:
+    """K of the newest ``epoch-K`` commit on a frontier lineage."""
+    return max((e for e in (_epoch_of(v.get("tag")) for v in lineage) if e is not None), default=0)
+
+
+def _covers(seen_version: dict) -> int | None:
+    """The frontier version whose url_hash set a seen version covers."""
+    return (seen_version.get("meta") or {}).get("covers")
 
 # Claims at or above this many rows are BIG epochs:
 # - the claim resolves against the corpus with a SHUFFLE_HASH join hint
@@ -264,14 +293,14 @@ class CrawlJob:
             rows = rows.cache()
             n_seeds = rows.count()
             self.frontier_t.n_buckets = suggest_buckets(n_seeds * self.SEED_GROWTH_FACTOR)
-        self.frontier_t.write_full(rows, tag="epoch-0")
+        covers = {"covers": self.frontier_t.write_full(rows, tag="epoch-0")}
         rows.unpersist()
         f = self.frontier_t.read(self.spark)
         if self.cfg.dedup and self.cfg.bloom_prefilter:
             self.seen_t.write_full(
                 build_seen(f.select("url_hash"), self.cfg.seen_buckets,
                            kind=self.cfg.seen_prefilter),
-                tag="epoch-0",
+                tag="epoch-0", meta=covers,
             )
         return f.count()
 
@@ -285,51 +314,134 @@ class CrawlJob:
             self.neardup.table if self.neardup is not None else None,
         ) if t is not None]
 
-    def _rollback_appends(self) -> None:
-        """Undo the appends of an epoch the kill cut short: each per-epoch
-        append table goes back to its last version before the first one
-        tagged ``epoch-J`` with J > K, K the frontier's last COMPLETED
-        epoch (an exact ``epoch-K`` tag; ``epoch-K-claim`` is only a
-        claim). Those tables have no per-item key, so a re-crawl would
-        otherwise add a second row per page. Manifest reads only; no
-        Spark job."""
-        def epoch_of(v: dict) -> int | None:
-            m = re.fullmatch(r"epoch-(\d+)", v.get("tag") or "")
-            return int(m.group(1)) if m else None
+    def _frontier_lineage(self) -> list[dict]:
+        """The frontier's current version and its ancestors back to its
+        seeding (init_task's ``epoch-0`` overwrite, which keeps no older
+        row), newest first."""
+        lineage = self.frontier_t.lineage()
+        seeded = next((i for i, v in enumerate(lineage) if v.get("tag") == "epoch-0"), None)
+        return lineage if seeded is None else lineage[: seeded + 1]
 
-        done = [e for e in map(epoch_of, self.frontier_t.snapshots()) if e is not None]
-        k = max(done, default=0)
-        for t in self._append_tables():
-            vs = t.snapshots()
-            first = next((i for i, v in enumerate(vs) if (epoch_of(v) or 0) > k), None)
+    def _hashes_version(self) -> int | None:
+        """The frontier version whose url_hash set the current one holds:
+        the current version, unless a commit that cannot add url_hashes
+        wrote it (see ``_same_hashes``)."""
+        v = self.frontier_t.head()
+        return (v.get("meta") or {}).get("hashes_of", v["version"]) if v else None
+
+    def _same_hashes(self) -> dict:
+        """``meta`` of a frontier commit that changes statuses but adds no
+        url_hash (the claim snapshot, the heal, reenqueue): it keeps the
+        url_hash set of the version it is written over, so a seen set in
+        step with that version stays in step."""
+        return {"hashes_of": self._hashes_version()}
+
+    def _close_pages_gap(self, pages: list[dict]) -> int:
+        """The frontier's last completed epoch K, after checking that its
+        pages append landed. That append runs beside the frontier merge
+        (run_epoch step 3), so a kill or a failed append can leave K's
+        frontier merge committed and its pages not. Then K is not
+        completed: the frontier rolls back to the version its first
+        epoch-K commit was written over (the seen set follows in
+        ``_repair_seen``). A version in ``pages`` (the pages table's
+        snapshots) tagged ``epoch-K`` or ``epoch-K-compact`` (the epoch's
+        GC compacted it) proves the append. Manifest operations only."""
+        lineage = self._frontier_lineage()
+        k = _completed_epoch(lineage)
+        if not k or any(v.get("tag") in (f"epoch-{k}", f"epoch-{k}-compact") for v in pages):
+            return k
+        first = max(i for i, v in enumerate(lineage)
+                    if v.get("tag") in (f"epoch-{k}", f"epoch-{k}-claim"))
+        if first + 1 == len(lineage):  # the version before K expired
+            return k
+        self.frontier_t.rollback(lineage[first + 1]["version"])
+        return _completed_epoch(lineage[first + 1:])
+
+    def _rollback_appends(self, k: int, appends: dict[Table, list[dict]]) -> None:
+        """Undo the appends of an epoch the kill cut short: each per-epoch
+        append table (``appends`` maps it to its snapshots) goes back to
+        its last version before the first one tagged ``epoch-J`` with
+        J > ``k``, the frontier's last COMPLETED epoch. Those tables have
+        no per-item key, so a re-crawl would otherwise add a second row per
+        page. Manifest operations only; no Spark job."""
+        for t, vs in appends.items():
+            first = next(
+                (i for i, v in enumerate(vs) if (_epoch_of(v.get("tag")) or 0) > k), None
+            )
             if first == 0:  # the table began in an aborted epoch
                 shutil.rmtree(t.dir, ignore_errors=True)
             elif first is not None:
                 t.rollback(vs[first - 1]["version"])
 
+    def _repair_seen(self) -> None:
+        """Restore the seen-set invariant (seen hashes == frontier
+        url_hashes) in work proportional to the lag. The epoch folds the
+        admitted hashes AFTER its frontier merge commits (and a stream
+        batch after its frontier append), so a kill between the two leaves
+        the seen set covering an older frontier version, and a stale shard
+        would re-admit a duplicate.
+
+        - In step (the seen set covers the version whose url_hash set the
+          frontier holds): nothing, zero Spark jobs.
+        - Lagging: the newest seen version covering an ancestor of the
+          current frontier becomes current (a seen version covering
+          commits a rollback dropped is left behind), and only the
+          frontier dirs written since that ancestor fold in through
+          filter_unseen, idempotent on hashes already present.
+        - No covered ancestor (no seen table, a catalog written before
+          coverage was recorded, or the covered version expired): the
+          O(frontier) build_seen."""
+        if not (self.cfg.dedup and self.cfg.bloom_prefilter):
+            return
+        hashes = self._hashes_version()
+        seen = self.seen_t.lineage()
+        if seen and _covers(seen[0]) == hashes:
+            return
+        meta = {"covers": hashes}
+        ancestors = {v["version"] for v in self._frontier_lineage()}
+        base = next((v for v in seen if _covers(v) in ancestors), None)
+        if base is None:
+            f = self.frontier_t.read(self.spark, FRONTIER_SCHEMA)
+            self.seen_t.write_full(
+                build_seen(f.select("url_hash"), self.cfg.seen_buckets,
+                           kind=self.cfg.seen_prefilter),
+                tag="resume-rebuild", meta=meta,
+            )
+            return
+        if base is not seen[0]:
+            self.seen_t.rollback(base["version"])
+        if _covers(base) == hashes:
+            return
+        added = self.frontier_t.read_since(self.spark, _covers(base), FRONTIER_SCHEMA)
+        shards = seen_shards(self._admit_unseen(added.select("url_hash"))).cache()
+        dirty = sorted(r.bucket_id for r in shards.select("bucket_id").collect())
+        if dirty:
+            self.seen_t.merge_buckets(shards, dirty, tag="resume-repair", meta=meta)
+        else:
+            self.seen_t.stamp("resume-repair", meta)
+        shards.unpersist()
+
     def resume(self) -> int:
-        """Heal after a kill: roll back the append tables of an aborted
-        epoch, running -> initial (U4 resetRunningItems) on the buckets
-        whose manifest value sets hold running rows (no frontier scan), and
-        continue from the last committed epoch tag (claim tags included)."""
-        self._rollback_appends()
+        """Heal after a kill, in work proportional to what the kill left
+        unfinished, never to the frontier: close a pages gap
+        (``_close_pages_gap``), roll back the append tables of an aborted
+        epoch, heal running -> initial (U4 resetRunningItems) on the
+        buckets whose manifest value sets hold running rows (no frontier
+        scan), and bring the seen set up to the frontier
+        (``_repair_seen``). After a clean stop every step is a manifest
+        read: zero Spark jobs.
+
+        Returns the newest epoch number any frontier commit used (claims
+        and rolled-back epochs included), so the next epoch's tags are new."""
+        appends = {t: t.snapshots() for t in self._append_tables()}
+        self._rollback_appends(self._close_pages_gap(appends[self.pages_t]), appends)
         dirty = self.frontier_t.buckets_with(Status.RUNNING)
         if dirty:
             fdirty = self.frontier_t.read_buckets(self.spark, dirty, FRONTIER_SCHEMA)
-            self.frontier_t.merge_buckets(reset_running(fdirty), dirty, tag="heal")
-        if self.cfg.dedup and self.cfg.bloom_prefilter:
-            # restore the seen-set invariant (seen hashes == frontier
-            # url_hashes): the epoch loop folds admitted hashes AFTER the
-            # frontier merge commits, so a kill between the two leaves the
-            # exact shards stale and a stale shard would re-admit a
-            # duplicate. One O(frontier) rebuild per resume — resume is a
-            # per-crash event, not a per-epoch cost.
-            f2 = self.frontier_t.read(self.spark, FRONTIER_SCHEMA)
-            self.seen_t.write_full(
-                build_seen(f2.select("url_hash"), self.cfg.seen_buckets,
-                           kind=self.cfg.seen_prefilter),
-                tag="resume-rebuild",
+            self.frontier_t.merge_buckets(
+                reset_running(fdirty), dirty, tag="heal", meta=self._same_hashes()
             )
+        self._repair_seen()
         tags = [
             v["tag"] for v in self.frontier_t.snapshots()
             if v.get("tag", "").startswith("epoch-")
@@ -387,7 +499,7 @@ class CrawlJob:
         dirty = self.frontier_t.bucket_ids_of(matched)
         fdirty = self.frontier_t.read_buckets(self.spark, dirty, FRONTIER_SCHEMA)
         self.frontier_t.merge_buckets(
-            reenqueue_items(fdirty, matched), dirty, tag="reenqueue"
+            reenqueue_items(fdirty, matched), dirty, tag="reenqueue", meta=self._same_hashes()
         )
         matched.unpersist()
         return n
@@ -540,6 +652,7 @@ class CrawlJob:
                 mark_running(self._frontier_buckets(frontier, dirty), claimed),
                 dirty,
                 tag=f"epoch-{epoch}-claim",
+                meta=self._same_hashes(),
             )
 
         # carry mode (the common politeness-bounded epoch): raw html rides
@@ -818,11 +931,11 @@ class CrawlJob:
             )
             if fold:
                 merged = merged.unionByName(self._frontier_buckets(frontier, fold))
-            self.frontier_t.merge_buckets(
+            covers = {"covers": self.frontier_t.merge_buckets(
                 merged.unionByName(new_rows.select(*FRONTIER_COLS)),
                 dirty + fold,
                 tag=f"epoch-{epoch}",
-            )
+            )}
         finally:
             if pages_thread is not None:
                 pages_thread.join()
@@ -837,12 +950,18 @@ class CrawlJob:
         stats.bytes_fetched = int(agg["bytes"] or 0)
         grow = grow_obs.get
         stats.new_urls = int(grow["n"] or 0)
-        # the folded shards commit AFTER the frontier (resume() rebuilds the
-        # seen set, covering a kill between the two commits); an epoch that
-        # admits nothing emits no shard and skips the commit
-        seen_dirty = sorted(int(b) for b in (grow.get("seen_bkts") or []))
-        if seen_dirty:
-            self.seen_t.merge_buckets(seen_shards(tagged), seen_dirty, tag=f"epoch-{epoch}")
+        # the folded shards commit AFTER the frontier, naming the frontier
+        # version they cover (resume() folds in what a kill between the two
+        # commits left out); an epoch that admits nothing emits no shard and
+        # records its coverage in a manifest-only version
+        if tagged is not None:
+            seen_dirty = sorted(int(b) for b in (grow.get("seen_bkts") or []))
+            if seen_dirty:
+                self.seen_t.merge_buckets(
+                    seen_shards(tagged), seen_dirty, tag=f"epoch-{epoch}", meta=covers
+                )
+            else:
+                self.seen_t.stamp(f"epoch-{epoch}", covers)
 
         # proxy rotation feedback (W2 loop): fold this epoch's blocked /
         # check-failed outcomes into the pool and persist, so next epoch's
@@ -887,7 +1006,7 @@ class CrawlJob:
             max_dirs = keep + self.cfg.snapshot_gc_epochs
             appends = self._append_tables()
             for t in appends:
-                t.compact_small(self.spark, max_dirs=max_dirs)
+                t.compact_small(self.spark, max_dirs=max_dirs, tag=f"epoch-{epoch}-compact")
             for t in (self.frontier_t, self.seen_t, self.proxy_t, *appends):
                 if t is not None:
                     t.expire_snapshots(keep_last=keep)

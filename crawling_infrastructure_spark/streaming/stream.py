@@ -64,9 +64,11 @@ def run_seed_ingest(
     tagged frame of admitted rows + folded seen shards). The admitted rows
     land as a *bucket append* (catalog.Table.append), so per-batch write
     volume is O(batch), never O(frontier); the shards then commit over
-    their seen buckets, so an epoch interleaved with the stream finds the
-    streamed URLs in the seen set and the dedup stays EXACT. Without a
-    seen set the batch anti-joins the frontier.
+    their seen buckets, naming the frontier version they cover, so an
+    epoch interleaved with the stream finds the streamed URLs in the seen
+    set and the dedup stays EXACT, and ``job.resume()`` folds in a batch
+    killed between its two commits. Without a seen set the batch
+    anti-joins the frontier.
     """
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
@@ -86,11 +88,11 @@ def run_seed_ingest(
                 F.collect_set(F.when(F.col(SHARD), F.col("bucket_id"))).alias("seen_bkts"),
             ).collect()[0]
             if grow["n"]:
-                job.frontier_t.append(
+                covers = {"covers": job.frontier_t.append(
                     admitted_rows(tagged).select(*FRONTIER_COLS), tag=tag
-                )
+                )}
                 job.seen_t.merge_buckets(
-                    seen_shards(tagged), sorted(grow["seen_bkts"]), tag=tag
+                    seen_shards(tagged), sorted(grow["seen_bkts"]), tag=tag, meta=covers
                 )
             tagged.unpersist()
             return

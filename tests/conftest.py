@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from crawling_infrastructure_spark.catalog import Table
 from crawling_infrastructure_spark.session import get_spark
 from crawling_infrastructure_spark.operators.frontier import frontier_rows
 from crawling_infrastructure_spark.schema import Status
@@ -90,3 +92,41 @@ def toy_frontier(spark, n=3000, hosts=37):
             .cast("int"),
         )
     )
+
+
+def _commit_tag(before: dict, after: dict) -> str:
+    """What a manifest commit does: the tag of the version it adds,
+    ``expire`` when it drops versions, else ``rollback``."""
+    old = {v["version"] for v in before["versions"]}
+    added = [v for v in after["versions"] if v["version"] not in old]
+    if added:
+        return added[0]["tag"]
+    return "expire" if len(after["versions"]) < len(before["versions"]) else "rollback"
+
+
+def kill_commit(monkeypatch, table: str, tag: str) -> None:
+    """Make the one catalog commit named (table, tag) raise before it
+    lands, as a kill there would. ``table`` is the table name's prefix
+    (``frontier``, ``pages``, ...) and ``tag`` is ``_commit_tag``'s. Keyed
+    by name, not by a commit counter, because the pages append commits on
+    a sibling thread."""
+    commit = Table._commit
+
+    def killed(self, manifest):
+        if self.name.split("_")[0] == table and _commit_tag(self._load(), manifest) == tag:
+            raise RuntimeError(f"killed at the {table} {tag} commit")
+        return commit(self, manifest)
+
+    monkeypatch.setattr(Table, "_commit", killed)
+
+
+def seen_hashes(spark, job) -> set[int]:
+    """Every url_hash the job's seen shards hold."""
+    out: set[int] = set()
+    for r in job.seen_t.read(spark).select("hashes").collect():
+        out |= set(np.frombuffer(bytes(r.hashes), dtype=np.int64).tolist())
+    return out
+
+
+def frontier_hashes(spark, job) -> set[int]:
+    return {r.url_hash for r in job.frontier_t.read(spark).select("url_hash").collect()}

@@ -123,3 +123,13 @@ def test_size_rule_shuffles_when_broadcast_is_off(spark, no_broadcast, name):
         )
     else:
         assert "BroadcastExchange" not in plan
+
+
+def test_lm_score_shuffle_path_computes_vocab_once(spark, no_broadcast):
+    """Off the broadcast path every vocab join of the bigram mappings
+    reads one V-row checkpoint: the unigram aggregate ran once, while the
+    query was built, so the executed plan holds no unigram shuffle. A
+    vocab left as a plan put one under every vocab join: six in all."""
+    plan = _plan(spark, "lm_score")
+    assert not re.search(r"Exchange hashpartitioning\(gram#", plan)
+    assert "Scan ExistingRDD[_v#" in plan

@@ -97,10 +97,10 @@ def test_kill_in_epoch_merge_resumes_without_duplicate_pages(
         job.run_epoch(epoch)
     merge = BucketedTable.merge_buckets
 
-    def killed(self, df, dirty, tag=None):
+    def killed(self, df, dirty, tag=None, **kwargs):
         if tag == f"epoch-{kill_epoch}":
             raise RuntimeError("killed inside the epoch merge")
-        return merge(self, df, dirty, tag)
+        return merge(self, df, dirty, tag, **kwargs)
 
     monkeypatch.setattr(BucketedTable, "merge_buckets", killed)
     with pytest.raises(RuntimeError, match="killed"):
